@@ -225,14 +225,18 @@ class LakehouseTable:
     def _commit_path(self, version: int) -> Path:
         return self.log_dir / f"{version:020d}.json"
 
-    def _put_if_absent(self, tmp, target) -> bool:
-        """True atomic put-if-absent for commit files. ``os.rename``
+    def _put_if_absent(self, commit: "Commit", target: Path) -> bool:
+        """Write ``commit`` to ``target`` with a true atomic
+        put-if-absent: stage a tmp file, then ``os.link`` it, which
+        raises FileExistsError atomically in the kernel. ``os.rename``
         silently REPLACES an existing target on POSIX, so an
         exists()-then-rename pair lets two racing writers both pass
         the check and the later rename clobber the earlier commit —
         the exact lost-update the commit protocol exists to prevent.
-        ``os.link`` raises FileExistsError atomically in the kernel;
-        the tmp file is always removed. Returns True iff we won."""
+        A crash never leaves torn JSON at ``target``; the tmp file is
+        always removed. Returns True iff we won."""
+        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
+        tmp.write_text(json.dumps(commit.__dict__))
         try:
             os.link(tmp, target)
         except FileExistsError:
@@ -242,34 +246,151 @@ class LakehouseTable:
         return True
 
     def _publish(self, commit: "Commit") -> "Commit":
-        """Atomically publish ``commit`` at its version (tmp +
-        link-if-absent). If the version is already taken, classify the
-        race: the caller computed a full-state rewrite against a base
-        that moved, so rebasing is unsafe — raise
-        :class:`ConcurrentModificationError` naming the intervening
-        commits (the Delta conflict matrix's "recompute and retry"
-        outcome). Append rebasing lives in :meth:`append_with_retry`;
-        partial-compaction rebasing in :meth:`compact_files`
-        (disjoint-files rule)."""
+        """The one path onto the main log: atomically publish
+        ``commit`` at its version. If a concurrent commit took that
+        version, the commit's own fields decide the outcome (the Delta
+        conflict matrix):
+
+        - a restate or deletion-vector commit was computed against a
+          base that moved, so rebasing could drop the concurrent rows
+          or shift DV positions: raise
+          :class:`ConcurrentModificationError` naming the intervening
+          commits ("recompute and retry");
+        - a partial rewrite (``removed_files``) rebases onto the new
+          head unless an intervening commit restated, carried deletion
+          vectors, or removed one of its files (the bin may no longer
+          be live — raise for a replan);
+        - a plain append commutes with anything and rebases (Delta's
+          blind-append rule).
+
+        A rebase only renumbers the log entry; the data files are
+        already written. Every published commit then runs the
+        checkpoint cadence."""
         if self._pre_publish_hook is not None:
             self._pre_publish_hook()
-        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(commit.__dict__))
-        if not self._put_if_absent(tmp, self._commit_path(commit.version)):
-            # tail parse, not history(): only the intervening commits
-            # matter, and the conflict report must work on a
-            # retention-cleaned log too
-            inter = [
-                (c.version, c.operation)
-                for c in self._commits_between(commit.version - 1, None)
-            ]
-            raise ConcurrentModificationError(
-                f"{commit.operation} computed against version "
-                f"{commit.version - 1} but concurrent commit(s) {inter} "
-                "landed; re-read the snapshot and retry"
-            )
+        while True:
+            # classify BEFORE the put: clean_log may have reclaimed the
+            # JSON at a stale version, so a taken version is not always
+            # visible as a failed put
+            head = self.latest_version()
+            if head < commit.version:
+                if self._put_if_absent(commit, self._commit_path(commit.version)):
+                    break
+                continue  # lost the race: reclassify against the new head
+            if commit.restate or commit.dv_files:
+                # tail parse, not history(): only the intervening
+                # commits matter, and the conflict report must work on
+                # a retention-cleaned log too
+                inter = [
+                    (c.version, c.operation)
+                    for c in self._commits_between(commit.version - 1, None)
+                ]
+                raise ConcurrentModificationError(
+                    f"{commit.operation} computed against version "
+                    f"{commit.version - 1} but concurrent commit(s) {inter} "
+                    "landed; re-read the snapshot and retry"
+                )
+            if commit.removed_files:
+                # the window must be COMPLETE on a retention-cleaned
+                # log: a reclaimed conflicting commit silently missing
+                # here would let a stale rebase resurrect rewritten
+                # rows, so a base below the cutoff raises the recipe
+                self._check_log_window(commit.version - 1)
+                bin_files = set(commit.removed_files)
+                conflicts = [
+                    (c.version, c.operation)
+                    for c in self._commits_between(commit.version - 1, head)
+                    if c.restate or c.dv_files or bin_files & set(c.removed_files or [])
+                ]
+                if conflicts:
+                    raise ConcurrentModificationError(
+                        f"partial rewrite of {sorted(bin_files)} raced with "
+                        f"{conflicts}; the bin may no longer be live — replan"
+                    )
+            commit.version = head + 1
         self._maybe_checkpoint(commit.version)
         return commit
+
+    def _create(self, commit: "Commit") -> "Commit":
+        """Publish ``commit`` as the table's v0 (convert, shallow
+        clone): put-if-absent at version 0 or raise. It never rebases
+        (it was planned against an empty table) and never overwrites:
+        a writer that landed v0 first keeps its commit."""
+        commit.version = 0
+        if not self._put_if_absent(commit, self._commit_path(0)):
+            raise RuntimeError(
+                f"{commit.operation}: table is not empty (raced a writer)"
+            )
+        return commit
+
+    def _describe(
+        self,
+        files: list[str],
+        operation: str,
+        stats_cols: list[str] | None = None,
+        stats: dict | None = None,
+        **fields,
+    ) -> "Commit":
+        """The commit describing freshly written data ``files``
+        (relative to the table root, or absolute): the exact row count
+        and, for ``stats_cols``, per-file min/max zone maps, both from
+        the parquet footers — no data re-read. Zone-map keys stay
+        LOGICAL (what ``scan_pruned`` callers filter on) while footers
+        hold physical names. ``stats`` merges caller-built per-file
+        entries (bloom descriptors, hidden partition values); a
+        ``dv_files`` field gets its row count from the footers too.
+        ``fields`` are the remaining :class:`Commit` fields; the
+        version is set by the publisher."""
+        zone: dict = {}
+        if stats_cols:
+            phys = self._physical_of_logical()
+            pcols = [phys.get(c, c) for c in stats_cols]
+            for f in files:
+                raw = _file_stats(self.path / f, pcols)
+                zone[f] = {c: raw[p] for c, p in zip(stats_cols, pcols) if p in raw}
+        for f, extra in (stats or {}).items():
+            zone.setdefault(f, {}).update(extra)
+        if fields.get("dv_files"):
+            fields["dv_row_count"] = _footer_row_count(self.path, fields["dv_files"])
+        return Commit(
+            version=-1,
+            files=files,
+            row_count=_footer_row_count(self.path, files),
+            operation=operation,
+            stats=zone or None,
+            **fields,
+        )
+
+    def _commit_files(
+        self, files: list[str], operation: str, base: int | None = None, **describe
+    ) -> "Commit":
+        """The shared tail of every write: describe the written
+        ``files`` (:meth:`_describe`) and publish them at ``base + 1``
+        through :meth:`_publish`, whose conflict rule comes from the
+        commit itself. ``base`` is the version the write was computed
+        from (a restate's snapshot, a rewrite's bin listing); a plain
+        append defaults to the current head."""
+        commit = self._describe(files, operation, **describe)
+        commit.version = (self.latest_version() if base is None else base) + 1
+        return self._publish(commit)
+
+    def _written(self, commit_dir: Path) -> list[str]:
+        """Table-relative paths of the data files a Spark write left
+        under ``commit_dir`` (recursive: partitioned writes nest)."""
+        return sorted(
+            str(p.relative_to(self.path)) for p in commit_dir.rglob("part-*.parquet")
+        )
+
+    @staticmethod
+    def _ddl_of(pdf: DataFrame, skip=()) -> dict[str, str]:
+        """{column: spark_ddl} of a frame about to be written — the
+        schema a commit records (``skip``: hive partition columns,
+        which live in directory names, not in the files)."""
+        return {
+            f.name: f.dataType.simpleString().lower()
+            for f in pdf.schema.fields
+            if f.name not in skip
+        }
 
     @staticmethod
     def _commit_of(d: dict) -> Commit:
@@ -324,7 +445,7 @@ class LakehouseTable:
 
     # -- commit-log checkpoints (Delta _last_checkpoint analog) ---------------
 
-    #: auto-checkpoint cadence on the append/DataSource write paths
+    #: auto-checkpoint cadence, applied by _publish to every commit
     CHECKPOINT_INTERVAL = 10
 
     def _ckpt_dir(self) -> Path:
@@ -352,7 +473,7 @@ class LakehouseTable:
         pointer). Checkpoints are additive metadata — the log itself
         is never compacted away, so ``history()``/time travel/exports
         are unaffected. Mirrors Delta's ``_last_checkpoint`` +
-        10-commit cadence (auto on append paths)."""
+        10-commit cadence (auto on every published commit)."""
         v = self.latest_version()
         if v < 0:
             return None
@@ -639,51 +760,27 @@ class LakehouseTable:
         df = self._apply_identity(df)
         self._validate_constraints(df)
         pdf = self._apply_reverse_renames(df)  # physical names (+ re-add minting)
-        commit_schema = {
-            f.name: f.dataType.simpleString().lower() for f in pdf.schema.fields
-        }
+        commit_schema = self._ddl_of(pdf)
         for c, tgt in self._check_append_types(commit_schema).items():
             pdf = pdf.withColumn(c, F_col(c).cast(tgt))
             commit_schema[c] = tgt
-        version = self.latest_version() + 1
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
-        phys = self._physical_of_logical()  # AFTER minting: re-adds resolve fresh
         pdf.write.mode("errorifexists").parquet(str(commit_dir))
-        files = sorted(
-            str(p.relative_to(self.path))
-            for p in commit_dir.glob("*.parquet")
-            if p.name.startswith("part-")
-        )
-        stats = None
-        if stats_cols:
-            # footers hold physical names; stats keys stay LOGICAL
-            # (what scan_pruned callers filter on)
-            pcols = [phys.get(c, c) for c in stats_cols]
-            stats = {}
-            for f in files:
-                raw = _file_stats(self.path / f, pcols)
-                stats[f] = {c: raw[p] for c, p in zip(stats_cols, pcols) if p in raw}
+        files = self._written(commit_dir)
+        blooms: dict = {}
         if bloom_cols:
-            stats = stats or {f: {} for f in files}
+            phys = self._physical_of_logical()  # AFTER minting: re-adds resolve fresh
             for bc in bloom_cols:
                 for f, bl in self._bloom_stats(commit_dir, files, phys.get(bc, bc)).items():
-                    stats.setdefault(f, {})[f"__bloom__:{bc}"] = bl
-        row_count = _footer_row_count(self.path, files)
-        commit = Commit(
-            version=version,
-            files=files,
-            row_count=row_count,
-            operation=operation,
-            stats=stats,
+                    blooms.setdefault(f, {})[f"__bloom__:{bc}"] = bl
+        return self._commit_files(
+            files,
+            operation,
+            stats_cols=stats_cols,
+            stats=blooms,
             schema=commit_schema,
             txn=[txn[0], int(txn[1])] if txn else None,
         )
-        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(commit.__dict__))
-        if not self._put_if_absent(tmp, self._commit_path(version)):
-            raise RuntimeError(f"concurrent commit at version {version}")
-        self._maybe_checkpoint(version)
-        return commit
 
     def convert_from_parquet(
         self, source_dir: str, stats_cols: list[str] | None = None
@@ -720,42 +817,7 @@ class LakehouseTable:
                 "values live in dir names, not in the files; import via a "
                 "partition-reconstructing rewrite instead"
             )
-        stats = None
-        if stats_cols:
-            stats = {}
-            for f in files:
-                raw = _file_stats(Path(f), stats_cols)
-                stats[f] = {c: raw[c] for c in stats_cols if c in raw}
-        commit = Commit(
-            version=0,
-            files=files,
-            row_count=_footer_row_count(Path("/"), files),
-            operation="convert",
-            stats=stats,
-        )
-        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(commit.__dict__))
-        if not self._put_if_absent(tmp, self._commit_path(0)):
-            raise RuntimeError("convert_from_parquet: table is not empty (raced a writer)")
-        return commit
-
-    def append_with_retry(self, df: DataFrame, retries: int = 3, **kw) -> Commit:
-        """Optimistic-concurrency append: on a version race (another
-        writer published our target version first) re-resolve the
-        head and retry — the Delta/Iceberg commit-loop contract.
-        The lost attempt's data files stay orphaned and invisible
-        (never referenced by any commit; ``vacuum`` reclaims them),
-        so a retry re-writes at most one attempt's worth of data.
-        """
-        last: RuntimeError | None = None
-        for _ in range(retries + 1):
-            try:
-                return self.append(df, **kw)
-            except RuntimeError as ex:
-                if "concurrent commit" not in str(ex):
-                    raise
-                last = ex
-        raise last  # type: ignore[misc]
+        return self._create(self._describe(files, "convert", stats_cols=stats_cols))
 
     def _commit_restate(
         self,
@@ -788,41 +850,19 @@ class LakehouseTable:
         # post-restate append guard on the O(log JSON) path (no footer
         # fallback until the next legacy commit). partitionBy columns
         # live in directory names, not in the files — exclude them.
-        part_phys = {phys.get(c, c) for c in (partition_by or [])}
-        commit_schema = {
-            f.name: f.dataType.simpleString().lower()
-            for f in pdf.schema.fields
-            if f.name not in part_phys
-        }
+        part_phys = [phys.get(c, c) for c in (partition_by or [])]
         w = pdf.write
-        if partition_by:
-            w = w.partitionBy(*[phys.get(c, c) for c in partition_by])
+        if part_phys:
+            w = w.partitionBy(*part_phys)
         w.parquet(str(commit_dir))
-        files = sorted(
-            str(p.relative_to(self.path)) for p in commit_dir.rglob("part-*.parquet")
-        )
-        stats = None
-        if stats_cols:
-            pcols = [phys.get(c, c) for c in stats_cols]
-            stats = {}
-            for f in files:
-                raw = _file_stats(self.path / f, pcols)
-                stats[f] = {c: raw[p] for c, p in zip(stats_cols, pcols) if p in raw}
-        row_count = _footer_row_count(self.path, files)
-        version = (
-            read_version if read_version is not None else self.latest_version()
-        ) + 1
-        return self._publish(
-            Commit(
-                version=version,
-                files=files,
-                row_count=row_count,
-                operation=operation,
-                stats=stats,
-                restate=True,
-                data_change=data_change,
-                schema=commit_schema,
-            )
+        return self._commit_files(
+            self._written(commit_dir),
+            operation,
+            base=read_version,
+            stats_cols=stats_cols,
+            restate=True,
+            data_change=data_change,
+            schema=self._ddl_of(pdf, part_phys),
         )
 
     def merge(
@@ -1038,24 +1078,10 @@ class LakehouseTable:
             matched = matched.join(prior, ["_dv_file", "_dv_pos"], "left_anti")
         commit_dir = self.path / "data" / f"deletedv-{uuid.uuid4().hex[:12]}"
         matched.write.parquet(str(commit_dir))
-        dv_files = sorted(
-            str(q.relative_to(self.path)) for q in commit_dir.rglob("part-*.parquet")
-        )
-        dv_count = _footer_row_count(self.path, dv_files)
         # DV positions were computed against read_version's file set; a
-        # concurrent restate/compaction invalidates them -> _publish raises
-        return self._publish(
-            Commit(
-                version=read_version + 1,
-                files=[],
-                row_count=0,
-                operation="delete_dv",
-                stats=None,
-                restate=False,
-                data_change=True,
-                dv_files=dv_files,
-                dv_row_count=dv_count,
-            )
+        # concurrent commit may shift them -> _publish raises
+        return self._commit_files(
+            [], "delete_dv", base=read_version, dv_files=self._written(commit_dir)
         )
 
     def _live_dv_files(self, version: int | None = None) -> list[str]:
@@ -1110,8 +1136,9 @@ class LakehouseTable:
         compact here (position-keyed DVs don't survive a rewrite —
         delete_where's restate path handles those).
         """
-        live = {f for _c, f in self._live_files()}
-        missing = [f for f in files_subset if f not in live]
+        read_version = self.latest_version()  # the base the bin is planned on
+        owner = {f: c for c, f in self._live_files()}
+        missing = [f for f in files_subset if f not in owner]
         if missing:
             raise ValueError(f"compact_files: not live: {missing}")
         dv_touched = any(c.dv_files for c in self._live_commits())
@@ -1120,66 +1147,30 @@ class LakehouseTable:
                 "compact_files: table has deletion vectors; position-keyed "
                 "DVs do not survive file rewrites — use delete_where/compact"
             )
-        version = self.latest_version() + 1
+        # keep zone maps for every column the bin's files had them for
+        # (bloom descriptors are per-file membership sets; not rebuilt)
+        stats_cols = sorted(
+            {
+                k
+                for f in files_subset
+                for k in ((owner[f].stats or {}).get(f) or {})
+                if not k.startswith("__bloom__:")
+            }
+        )
         combined = self._read_data(
             *[str(self.path / f) for f in files_subset]
         )
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         combined.repartition(1).write.mode("errorifexists").parquet(str(commit_dir))
-        files = sorted(
-            str(p.relative_to(self.path))
-            for p in commit_dir.glob("*.parquet")
-            if p.name.startswith("part-")
-        )
-        row_count = _footer_row_count(self.path, files)
-        commit = Commit(
-            version=version,
-            files=files,
-            row_count=row_count,
-            operation=operation,
+        return self._commit_files(
+            self._written(commit_dir),
+            operation,
+            base=read_version,
+            stats_cols=stats_cols,
+            schema=self._ddl_of(combined),
             data_change=False,
             removed_files=sorted(files_subset),
         )
-        return self._publish_partial(commit, set(files_subset))
-
-    def _publish_partial(self, commit: "Commit", bin_files: set[str]) -> "Commit":
-        """Conflict-aware publish for PARTIAL rewrites (the Delta
-        conflict matrix's rebase case): a partial rewrite only touches
-        ``bin_files``, so it REBASES over concurrent appends and
-        disjoint partial rewrites — their file sets cannot invalidate
-        this bin. A concurrent restate, DV delete, or overlapping
-        rewrite CAN (the bin may no longer be live / positions may
-        shift), so those raise for a replan."""
-        if self._pre_publish_hook is not None:
-            self._pre_publish_hook()
-        while True:
-            head = self.latest_version()
-            if head >= commit.version:
-                # tail parse, not history(): only commits at/after this
-                # version can conflict. On a retention-cleaned log the
-                # window must be COMPLETE — a reclaimed conflicting
-                # commit silently missing from `inter` would let a
-                # stale rebase resurrect rewritten rows — so a base
-                # that fell below the cutoff raises the recipe (replan
-                # from a fresh snapshot), never classifies blind
-                self._check_log_window(commit.version - 1)
-                inter = self._commits_between(commit.version - 1, None)
-                conflicts = [
-                    (c.version, c.operation)
-                    for c in inter
-                    if c.restate or c.dv_files or (set(c.removed_files or []) & bin_files)
-                ]
-                if conflicts:
-                    raise ConcurrentModificationError(
-                        f"partial rewrite of {sorted(bin_files)} raced with "
-                        f"{conflicts}; the bin may no longer be live — replan"
-                    )
-                commit.version = head + 1  # rebase: disjoint-files rule
-            tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-            tmp.write_text(json.dumps(commit.__dict__))
-            if not self._put_if_absent(tmp, self._commit_path(commit.version)):
-                continue  # lost another race — reclassify against the new head
-            return commit
 
     def restore(self, version: int | None = None, timestamp: float | None = None) -> Commit:
         """RESTORE TABLE to an earlier version (Delta ``RESTORE``
@@ -1298,7 +1289,6 @@ class LakehouseTable:
         if target.latest_version() >= 0:
             raise ValueError(f"clone target {target_path} is not empty")
         if shallow:
-            live = self._live_commits(version)
             # removed-files-aware live set: partial rewrites
             # (compact_files, incremental clustering) supersede files
             # of EARLIER commits — cloning raw commit file lists would
@@ -1326,18 +1316,14 @@ class LakehouseTable:
                 str((self.path / f).resolve())
                 for f in self._live_dv_files(version)
             ]
-            commit = Commit(
-                version=0,
-                files=files,
-                row_count=_footer_row_count(Path("/"), files),
-                operation="clone_shallow",
-                stats=stats or None,
-                restate=False,
-                data_change=True,
-                dv_files=dv_files or None,
-                dv_row_count=sum(c.dv_row_count for c in live),
+            # put-if-absent, never a bare write: a writer that landed
+            # v0 after the emptiness check keeps its commit (clone
+            # raises), and a crash cannot leave torn JSON at v0
+            target._create(
+                target._describe(
+                    files, "clone_shallow", stats=stats, dv_files=dv_files or None
+                )
             )
-            target._commit_path(0).write_text(json.dumps(commit.__dict__))
         else:
             # deep clone materializes the snapshot, which already
             # surfaces LOGICAL names — its files need no mapping
@@ -1581,6 +1567,7 @@ class LakehouseTable:
         spec = meta.get("clustering")
         if not spec:
             raise ValueError("hilbert_cluster_incremental: run hilbert_cluster first")
+        read_version = self.latest_version()  # the base the rewrite is planned on
         if any(c.dv_files for c in self._live_commits()):
             raise ValueError(
                 "hilbert_cluster_incremental: table has deletion vectors; "
@@ -1592,7 +1579,6 @@ class LakehouseTable:
         if not new_files:
             return None
         cols = spec["cols"]
-        phys = self._physical_of_logical()
         raw = self._read_data(
             *[str(self.path / f) for f in new_files]
         )
@@ -1600,37 +1586,24 @@ class LakehouseTable:
         clustered = self._hilbert_bucketed(
             df, cols, spec["bounds"], spec["target_partitions"]
         )
-        version = self.latest_version() + 1
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         # hive-partition by the bucket id like the full rewrite: one
         # curve-contiguous file per bucket regardless of hash
         # collisions in repartition; the synthetic _hb column lives
         # only in dir names (snapshots read explicit file lists)
-        self._apply_reverse_renames(clustered).write.mode(
-            "errorifexists"
-        ).partitionBy("_hb").parquet(str(commit_dir))
-        files = sorted(
-            str(p.relative_to(self.path))
-            for p in commit_dir.rglob("*.parquet")
-            if p.name.startswith("part-")
+        pclustered = self._apply_reverse_renames(clustered)
+        pclustered.write.mode("errorifexists").partitionBy("_hb").parquet(
+            str(commit_dir)
         )
-        scols = stats_cols or cols
-        stats = {}
-        for f in files:
-            rawst = _file_stats(self.path / f, [phys.get(c, c) for c in scols])
-            stats[f] = {
-                c: rawst[phys.get(c, c)] for c in scols if phys.get(c, c) in rawst
-            }
-        commit = Commit(
-            version=version,
-            files=files,
-            row_count=_footer_row_count(self.path, files),
-            operation="hilbert_cluster_incr",
+        out = self._commit_files(
+            self._written(commit_dir),
+            "hilbert_cluster_incr",
+            base=read_version,
+            stats_cols=stats_cols or cols,
+            schema=self._ddl_of(pclustered, ["_hb"]),
             data_change=False,
             removed_files=sorted(new_files),
-            stats=stats or None,
         )
-        out = self._publish_partial(commit, set(new_files))
         meta = self._read_meta()
         if meta.get("clustering"):
             meta["clustering"]["version"] = out.version
@@ -1766,12 +1739,10 @@ class LakehouseTable:
         return head
 
     def _branch_commits(self, name: str) -> list[Commit]:
-        out = []
-        for p in sorted(self._branch_dir(name).glob("*.json")):
-            d = json.loads(p.read_text())
-            d.setdefault("ts", None)
-            out.append(Commit(**d))
-        return out
+        return [
+            self._commit_of(json.loads(p.read_text()))
+            for p in sorted(self._branch_dir(name).glob("*.json"))
+        ]
 
     def branch_head(self, name: str) -> int:
         brs = self.branches()
@@ -1794,34 +1765,20 @@ class LakehouseTable:
         # merge_branch can never collide ids
         df = self._apply_identity(df)
         self._validate_constraints(df)
-        version = self.branch_head(name) + 1
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         pdf = self._apply_reverse_renames(df)
-        commit_schema = {
-            f.name: f.dataType.simpleString().lower() for f in pdf.schema.fields
-        }
+        commit_schema = self._ddl_of(pdf)
         for c, tgt in self._check_append_types(commit_schema).items():
             pdf = pdf.withColumn(c, F_col(c).cast(tgt))
             commit_schema[c] = tgt
         pdf.write.mode("errorifexists").parquet(str(commit_dir))
-        files = sorted(
-            str(p.relative_to(self.path))
-            for p in commit_dir.glob("*.parquet")
-            if p.name.startswith("part-")
+        commit = self._describe(
+            self._written(commit_dir), operation, schema=commit_schema
         )
-        row_count = _footer_row_count(self.path, files)
-        commit = Commit(
-            version=version,
-            files=files,
-            row_count=row_count,
-            operation=operation,
-            schema=commit_schema,
-        )
-        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(commit.__dict__))
-        target = self._branch_dir(name) / f"{version:020d}.json"
-        if not self._put_if_absent(tmp, target):
-            raise RuntimeError(f"concurrent branch commit at version {version}")
+        commit.version = self.branch_head(name) + 1
+        target = self._branch_dir(name) / f"{commit.version:020d}.json"
+        if not self._put_if_absent(commit, target):
+            raise RuntimeError(f"concurrent branch commit at version {commit.version}")
         return commit
 
     def snapshot_branch(self, name: str) -> DataFrame:
@@ -1862,14 +1819,13 @@ class LakehouseTable:
         return deleted
 
     def merge_branch(self, name: str) -> int:
-        """Publish the branch's commits onto main. If main still sits
-        at the fork point this is a pure FAST-FORWARD (commit files
-        move in keeping their version numbers). If main ADVANCED, the
-        branch REBASES: append-only branch commits commute with any
-        main history (an append adds rows regardless of what else
-        landed — the same disjoint-files rule appends and partial
-        compactions use), so they renumber onto the new head. Either
-        way the ref is dropped afterwards."""
+        """Publish the branch's commits onto main, then drop the ref.
+        Append-only branch commits commute with any main history (an
+        append adds rows regardless of what else landed), so each one
+        publishes through :meth:`_publish` as a plain append at the
+        current head + 1: a pure FAST-FORWARD (versions kept) when
+        main still sits at the fork point, a REBASE onto the new head
+        when main advanced."""
         brs = self.branches()
         if name not in brs:
             raise ValueError(f"unknown branch {name!r}")
@@ -1878,60 +1834,21 @@ class LakehouseTable:
         # retention-cleaned window there could silently miss an
         # already-merged copy and replay it (duplicate rows)
         self._check_log_window(fork)
-        head = self.latest_version()
-        commits = sorted(self._branch_dir(name).glob("*.json"))
-        # retry-safety: a crash between linking a commit into main and
-        # unlinking the branch copy leaves it in BOTH logs; on retry
-        # main has advanced, so a naive rebase would replay the
-        # already-merged commit (duplicate rows — r6 ADVICE). A branch
-        # commit whose file list already sits at a main version after
-        # the fork was merged by the crashed attempt: drop its copy.
-        merged = {
-            tuple(c.files) for c in self._commits_between(fork, None)
-        }
-        if head == fork:
-            # fast-forward: link (atomic put-if-absent — a concurrent
-            # main writer landing the same version must not be
-            # clobbered), then unlink the branch copy only once the
-            # main commit is durable. Crash between the two leaves the
-            # commit in both places; the dedup above is the retry path.
-            for p in commits:
-                try:
-                    os.link(p, self._commit_path(int(p.stem)))
-                except FileExistsError:
-                    d = json.loads(p.read_text())
-                    if tuple(d["files"]) in merged:
-                        p.unlink()  # crashed attempt already merged it
-                        continue
-                    raise ConcurrentModificationError(
-                        f"merge_branch {name!r}: main advanced past the "
-                        f"fork point mid-merge at version {p.stem}; retry"
-                    ) from None
-                p.unlink()
-        else:
-            # rebase: replay each branch commit at head+1… — contents
-            # unchanged (pure appends), only the version renumbers.
-            # Each rebased commit is written tmp + link-if-absent (a
-            # bare write_text could leave torn JSON on crash, breaking
-            # every later history() parse), and the branch copy is
-            # unlinked only after its main commit is durable — a crash
+        # retry-safety: a crash between publishing a commit onto main
+        # and unlinking the branch copy leaves it in BOTH logs; a naive
+        # replay would duplicate its rows. A branch commit whose file
+        # list already sits at a main version after the fork was
+        # merged by the crashed attempt: drop its copy.
+        merged = {tuple(c.files) for c in self._commits_between(fork, None)}
+        for p in sorted(self._branch_dir(name).glob("*.json")):
+            c = self._commit_of(json.loads(p.read_text()))
+            if tuple(c.files) not in merged:
+                c.version = self.latest_version() + 1
+                self._publish(c)
+            # unlinked only once its main commit is durable: a crash
             # mid-merge never loses a commit, it at worst leaves the
-            # branch ref for a retry.
-            for p in commits:
-                d = json.loads(p.read_text())
-                if tuple(d["files"]) in merged:
-                    p.unlink()  # crashed attempt already merged it
-                    continue
-                head += 1
-                d["version"] = head
-                tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-                tmp.write_text(json.dumps(d))
-                if not self._put_if_absent(tmp, self._commit_path(head)):
-                    raise ConcurrentModificationError(
-                        f"merge_branch {name!r}: version {head} appeared "
-                        "mid-rebase; retry"
-                    )
-                p.unlink()
+            # branch ref for a retry
+            p.unlink()
         shutil.rmtree(self._branch_dir(name), ignore_errors=True)
         meta = self._read_meta()
         meta["branches"].pop(name, None)
@@ -3283,13 +3200,9 @@ class LakehouseTable:
         df = self._apply_generated_columns(df)
         df = self._apply_identity(df)
         self._validate_constraints(df)
-        commit_schema = {
-            f.name: f.dataType.simpleString().lower()
-            for f in self._apply_reverse_renames(df).schema.fields
-        }
+        commit_schema = self._ddl_of(self._apply_reverse_renames(df))
         upcasts = self._check_append_types(commit_schema)
         commit_schema.update(upcasts)
-        version = self.latest_version() + 1
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         derived = [(item, self._transform_column(item, df)) for item in spec]
         aug = df
@@ -3324,21 +3237,9 @@ class LakehouseTable:
                     item: [v, v] for (item, _), v in zip(derived, tup)
                 }
             seen = now
-        files.sort()
-        row_count = _footer_row_count(self.path, files)
-        commit = Commit(
-            version=version,
-            files=files,
-            row_count=row_count,
-            operation=operation,
-            stats=stats,
-            schema=commit_schema,
+        return self._commit_files(
+            sorted(files), operation, stats=stats, schema=commit_schema
         )
-        tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(commit.__dict__))
-        if not self._put_if_absent(tmp, self._commit_path(version)):
-            raise RuntimeError(f"concurrent commit at version {version}")
-        return commit
 
     # -- VACUUM ---------------------------------------------------------------
 

@@ -617,12 +617,7 @@ class _WriterState:
         restate: bool,
         txn: tuple[str, int] | None = None,
     ) -> None:
-        from lakehouse_test_spark.plans.lakehouse import (
-            Commit,
-            LakehouseTable,
-            _file_stats,
-            _footer_row_count,
-        )
+        from lakehouse_test_spark.plans.lakehouse import LakehouseTable
 
         files = sorted(f for m in messages if m for f in m.files)
         if not files and not restate:
@@ -632,53 +627,25 @@ class _WriterState:
         # (the commit-recorded schema keeps the empty table readable;
         # time travel still sees the old data). Silently no-opping
         # here was r5 judge bug #1.
-        t = LakehouseTable(None, self.root)
-        stats = None
-        if self.stats_cols:
-            pcols = [self.phys_of_logical.get(c, c) for c in self.stats_cols]
-            stats = {}
-            for f in files:
-                raw = _file_stats(Path(self.root) / f, pcols)
-                stats[f] = {
-                    c: raw[p]
-                    for c, p in zip(self.stats_cols, pcols)
-                    if p in raw
-                }
         # executor-built bloom descriptors land in the commit log under
         # the same __bloom__: keys the native path and scan_point use
+        blooms: dict = {}
         for m in messages or []:
-            if not m:
-                continue
             for f, per_col in (getattr(m, "blooms", None) or {}).items():
-                stats = stats if stats is not None else {}
                 for c, bl in per_col.items():
-                    stats.setdefault(f, {})[f"__bloom__:{c}"] = bl
-        from lakehouse_test_spark.plans.lakehouse import (
-            ConcurrentModificationError,
+                    blooms.setdefault(f, {})[f"__bloom__:{c}"] = bl
+        # the table's one commit step: an append rebases over a
+        # concurrent commit (appends commute — only the log entry
+        # moves, the data files are staged); an overwrite never does
+        LakehouseTable(None, self.root)._commit_files(
+            files,
+            operation,
+            stats_cols=self.stats_cols,
+            stats=blooms,
+            restate=restate,
+            schema=self.commit_schema,
+            txn=[txn[0], int(txn[1])] if txn else None,
         )
-
-        row_count = _footer_row_count(Path(self.root), files) if files else 0
-        # appends COMMUTE (the Delta conflict matrix): a version race
-        # against a concurrent writer re-resolves the head and retries
-        # — data files are already staged, only the log entry moves.
-        # Restates never rebase (computed against a moved base).
-        for attempt in range(4):
-            commit = Commit(
-                version=t.latest_version() + 1,
-                files=files,
-                row_count=row_count,
-                operation=operation,
-                stats=stats,
-                restate=restate,
-                schema=self.commit_schema,
-                txn=[txn[0], int(txn[1])] if txn else None,
-            )
-            try:
-                t._publish(commit)
-                return
-            except ConcurrentModificationError:
-                if restate or attempt == 3:
-                    raise
 
     def discard(self, messages) -> None:
         for m in messages or []:

@@ -637,8 +637,7 @@ def test_rollup_maintains_across_dv_deletes(spark, tmp_path):
 
 def test_append_with_retry_wins_version_race(spark, table):
     """Simulate a concurrent writer grabbing the next version: the
-    retrying append must land on a later version; the plain append
-    raises."""
+    append must land on a later version."""
     import json
 
     table.append(person_stream(spark, 10))
@@ -648,9 +647,8 @@ def test_append_with_retry_wins_version_race(spark, table):
             "dv_files": None, "dv_row_count": 0}
     table._commit_path(1).write_text(json.dumps(race))
 
-    # plain append targeting v1 would raise only if it computed the
-    # version before the race; append_with_retry always lands
-    c = table.append_with_retry(person_stream(spark, 5))
+    # an append rebases over any concurrent commit, so it always lands
+    c = table.append(person_stream(spark, 5))
     assert c.version == 2
     assert table.snapshot().count() == 15
 

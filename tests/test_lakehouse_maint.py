@@ -837,9 +837,12 @@ def test_publish_put_if_absent_is_atomic(spark, table):
         files=[],
         row_count=0,
         operation="restate",
+        restate=True,  # a plain append would rebase instead
     )
     with pytest.raises(ConcurrentModificationError):
         table._publish(loser)
+    # the put itself refuses the taken version, with no pre-check
+    assert not table._put_if_absent(loser, table._commit_path(c.version))
     # the original commit file is intact (not clobbered)
     assert table.history()[0].files == c.files
     assert not list(Path(table.log_dir).glob(".tmp-*"))

@@ -480,8 +480,8 @@ def test_streaming_sink_into_identity_table(spark, sf_dir):
 
 def test_threaded_append_with_retry_loses_nothing(spark):
     """Optimistic-concurrency smoke under REAL thread interleaving:
-    4 writers x 5 appends race on the commit log via
-    append_with_retry; every row must land exactly once and the log
+    4 writers x 5 appends race on the commit log via append, which
+    rebases over concurrent commits; every row must land exactly once and the log
     must be a gap-free version chain."""
     import threading
 
@@ -494,7 +494,7 @@ def test_threaded_append_with_retry_loses_nothing(spark):
                 df = spark.createDataFrame(
                     [(wid * 100 + i, wid)], "k int, writer int"
                 )
-                t.append_with_retry(df, retries=30)
+                t.append(df)
         except Exception as ex:  # pragma: no cover
             errs.append(ex)
 
@@ -524,7 +524,7 @@ def test_threaded_identity_appends_never_collide(spark):
         try:
             for i in range(3):
                 df = spark.createDataFrame([(wid * 10 + i,)], "k int")
-                t.append_with_retry(df, retries=30)
+                t.append(df)
         except Exception as ex:  # pragma: no cover
             errs.append(ex)
 
