@@ -65,6 +65,25 @@ def _drain_available_now(spark, path, ck, out, cap):
     q.awaitTermination(120)
 
 
+def _restart_until_idle(drain, ck, runs):
+    """Restart ``drain`` on checkpoint ``ck`` up to ``runs`` times (a
+    capped stream may need several runs to reach the head), stopping
+    after the first restart that commits no new micro-batch: the
+    stream is caught up, and every further restart on the unchanged
+    checkpoint and log would repeat that same no-op run."""
+    from pathlib import Path
+
+    def committed():
+        done = Path(ck, "commits")
+        return len(list(done.glob("[0-9]*"))) if done.exists() else 0
+
+    for _ in range(runs):
+        before = committed()
+        drain()
+        if committed() == before:
+            return
+
+
 def test_stream_fuzz_snapshot_seed_exactly_once(spark, tmp_path):
     """5 seeded scripts × {backlog with restates/DVs/compactions} ×
     {uncapped, version-capped, file-capped, both} × a restart between two drain stages: the
@@ -104,8 +123,11 @@ def test_stream_fuzz_snapshot_seed_exactly_once(spark, tmp_path):
             op = rng.choice(["append", "append", "dv", "compact"])
             lo = _apply_op(spark, t, rng, op, lo)
         # restart (same checkpoint) — possibly several capped runs
-        for _ in range(16 if cap else 2):
-            _drain_available_now(spark, str(t.path), ck, out, cap)
+        _restart_until_idle(
+            lambda: _drain_available_now(spark, str(t.path), ck, out, cap),
+            ck,
+            16 if cap else 2,
+        )
         got = _rows(spark.read.parquet(out).collect())
         want = _rows(
             t.read_changes_cdf(-1, upto_version=seedv)
@@ -330,8 +352,7 @@ def test_stream_fuzz_schema_evolution_backlog(spark, tmp_path):
                 spark, t, rng, rng.choice(["append", "append", "dv", "compact"]),
                 lo, st,
             )
-        for _ in range(12 if cap else 2):
-            drain()
+        _restart_until_idle(drain, ck, 12 if cap else 2)
         got = _rows_kv(spark.read.parquet(out).collect(), st["vcol"])
         want = _rows_kv(
             t.read_changes_cdf(-1, upto_version=seedv)
@@ -394,15 +415,21 @@ def test_stream_fuzz_log_retention_interplay(spark, tmp_path):
         for _ in range(rng.randint(2, 4)):
             op = rng.choice(["append", "append", "dv", "compact"])
             lo = _apply_op(spark, t, rng, op, lo)
-        for _ in range(16 if cap else 2):
-            _drain_available_now(spark, str(t.path), ck, out, cap)
+        _restart_until_idle(
+            lambda: _drain_available_now(spark, str(t.path), ck, out, cap),
+            ck,
+            16 if cap else 2,
+        )
         t.checkpoint()
         t.clean_log(keep_versions=max(1, t.latest_version() - seedv))
         # the caught-up stream drains THROUGH the retention event
         for _ in range(rng.randint(1, 2)):
             lo = _apply_op(spark, t, rng, rng.choice(["append", "dv"]), lo)
-        for _ in range(16 if cap else 2):
-            _drain_available_now(spark, str(t.path), ck, out, cap)
+        _restart_until_idle(
+            lambda: _drain_available_now(spark, str(t.path), ck, out, cap),
+            ck,
+            16 if cap else 2,
+        )
         got = _rows(spark.read.parquet(out).collect())
         want = sorted(want_seed + _rows(t.read_changes_cdf(seedv).collect()))
         assert got == want, (
