@@ -636,14 +636,15 @@ def export_delta_log(
         # vacuumed files (below the retention horizon) have no footers;
         # derive the schema from the survivors, falling back to the
         # current snapshot's schema when an entire vintage is gone.
-        # _read_data (not raw mergeSchema): DROPPED physicals must not
-        # leak into the exported schema and WIDENED columns export
-        # their target type (mixed int/bigint vintages would otherwise
-        # fail the schema merge outright).
+        # The table's own fold (not a raw footer merge): DROPPED
+        # physicals must not leak into the exported schema and WIDENED
+        # columns export their target type (mixed int/bigint vintages
+        # would otherwise fail the schema merge outright).
         present = [str(table.path / f) for f in files if (table.path / f).exists()]
         if not present:
             return table.snapshot().schema.json() if files else "{}"
-        return table._read_data(*present).schema.json()
+        u = table._fold(table._read_meta(), [(None, f) for f in present])
+        return table._read_data(present, u).schema.json()
 
     # ---- merged-live-schema FOLD (round 8): the per-commit schema
     # check used to call _schema_of over the ENTIRE live set — one
@@ -679,12 +680,8 @@ def export_delta_log(
         if key in _render_cache:
             return _render_cache[key]
         try:
-            u = table._fold_schemas(
-                [("live", dict(fields_live))], dropped0, wid0, opaque_ok=True
-            )
-            if not u or any(
-                str(t).startswith("__opaque__") for t in u.values()
-            ):
+            u = table._fold_schemas([("live", dict(fields_live))], dropped0, wid0)
+            if not u:
                 out = None
             else:
                 ddl = ", ".join(f"`{n}` {t}" for n, t in u.items())

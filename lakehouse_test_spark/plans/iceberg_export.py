@@ -571,24 +571,17 @@ def _schema_history(
 
 def _head_schema(table):
     """Spark StructType of the head snapshot WITHOUT touching data
-    files: fold the live commits' RECORDED schemas (drops excluded,
-    widenings applied — the same fold write enforcement trusts),
-    renames applied on an empty frame. ``snapshot().schema`` paid one
-    mergeSchema footer read per LIVE file per export call — the
-    dominant cost of an incremental export on an append-heavy table
-    (profiled: 1.85 s of a 2.0 s call at 300 one-file commits).
-    Fallback to the snapshot plan only for legacy logs whose commits
-    predate schema recording (opaque nested vintages included)."""
-    try:
-        u = table._unified_live_schema()
-        if u and not any(str(t).startswith("__opaque__") for t in u.values()):
-            ddl = ", ".join(f"`{n}` {t}" for n, t in u.items())
-            return table._apply_renames(
-                table.spark.createDataFrame([], ddl)
-            ).schema
-    except (ValueError, OSError):
-        pass
-    return table.snapshot().schema
+    files: the pinned snapshot's folded schema (drops excluded,
+    widenings applied), renames applied on an empty frame — no file
+    listing, which a ``snapshot()`` plan pays per LIVE file per
+    export call."""
+    snap = table.pin()
+    if not snap.schema:
+        return table.snapshot().schema  # raises the empty-table error
+    ddl = ", ".join(f"`{n}` {t}" for n, t in snap.schema.items())
+    return table._apply_renames(
+        table.spark.createDataFrame([], ddl), snap.meta
+    ).schema
 
 
 def _snapshot_id(version: int) -> int:

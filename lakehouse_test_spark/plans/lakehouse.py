@@ -31,6 +31,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -110,6 +111,68 @@ def txn_marker(c: Commit, legacy: bool = False) -> tuple[str, int] | None:
         if pre and num.isdigit():
             return pre, int(num)
     return None
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One resolved version of a table: everything a read of it
+    needs, taken from the log once by :meth:`LakehouseTable.pin`.
+    Every read plans from one of these, so files, deletion vectors,
+    schema and metadata always come from the same version — a
+    commit landing mid-read cannot mix two versions into one result.
+    Immutable by contract: readers never re-resolve "latest"."""
+
+    #: the resolved version (a branch pin: the branch head; -1: empty)
+    version: int
+    #: the live commit chain: the latest restate plus every later one
+    commits: tuple[Commit, ...]
+    #: live (owning commit, file) pairs, ``removed_files`` applied
+    files: tuple[tuple[Commit, str], ...]
+    #: live deletion-vector files
+    dv_files: tuple[str, ...]
+    #: unified PHYSICAL schema {col: ddl}, folded from the commits'
+    #: recorded schemas (footers only for commits that record none),
+    #: dropped columns excluded, widening targets applied
+    schema: dict
+    #: ``_meta.json`` as read at pin time (renames, drops, widenings)
+    meta: dict
+    #: loads the pinned checkpoint's side-car bloom descriptors —
+    #: lazily, only point lookups and self-contained copies need them
+    blooms: Callable[[], dict] = dataclasses_field(default=dict, repr=False, compare=False)
+
+    @property
+    def dv_rows(self) -> int:
+        return sum(c.dv_row_count for c in self.commits)
+
+    @property
+    def rows(self) -> int:
+        """Live rows from the log alone: every live commit's rows
+        except rewrites that only move rows (``data_change=False``
+        with ``removed_files`` — their rows are already counted under
+        the files they replaced), minus rows deleted by live DVs."""
+        return (
+            sum(c.row_count for c in self.commits if c.data_change or not c.removed_files)
+            - self.dv_rows
+        )
+
+    def file_stats(self, c: Commit, f: str, blooms: bool = False) -> dict:
+        """Per-file stats of live file ``f`` owned by ``c``; with
+        ``blooms`` the side-car bloom descriptors are overlaid too
+        (inline entries win)."""
+        own = (c.stats or {}).get(f) or {}
+        return {**self.blooms().get(f, {}), **own} if blooms else own
+
+
+_DV_DDL = "_dv_file STRING, _dv_pos BIGINT"
+
+#: marks a footer type the fold compares by exact string only (nested
+#: vintages never conflict); stripped once the fold is done
+_OPAQUE = "__opaque__:"
+
+
+def _ddl(schema: dict) -> str:
+    """{col: ddl} → the DDL string ``spark.read.schema`` takes."""
+    return ", ".join(f"`{n}` {t}" for n, t in schema.items())
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -385,9 +448,11 @@ class LakehouseTable:
     def _ddl_of(pdf: DataFrame, skip=()) -> dict[str, str]:
         """{column: spark_ddl} of a frame about to be written — the
         schema a commit records (``skip``: hive partition columns,
-        which live in directory names, not in the files)."""
+        which live in directory names, not in the files). Spark's
+        rendering keeps struct field names' case: the recorded schema
+        is what reads pass to Spark."""
         return {
-            f.name: f.dataType.simpleString().lower()
+            f.name: f.dataType.simpleString()
             for f in pdf.schema.fields
             if f.name not in skip
         }
@@ -514,7 +579,7 @@ class LakehouseTable:
         # legacy monolithic side-car (pre-shard checkpoints): load it
         # once to migrate stripped commits' blooms into shards
         legacy_blob = (
-            self._ckpt_blooms()
+            self._ckpt_blooms(prev_ck)
             if isinstance(prev_ck.get("blooms"), str)
             else {}
         )
@@ -629,16 +694,15 @@ class LakehouseTable:
             pass  # retention is an optimization, never a gate
         return state
 
-    def _ckpt_blooms(self) -> dict:
-        """File → {``__bloom__:col``: descriptor} from the current
-        checkpoint's side-car shards — loaded lazily (and cached per
+    def _ckpt_blooms(self, ck: dict | None) -> dict:
+        """File → {``__bloom__:col``: descriptor} from checkpoint
+        ``ck``'s side-car shards — loaded lazily (and cached per
         checkpoint version) by bloom membership probes only; snapshot
         planning never parses bitsets. Tail commits (after the
         checkpoint) keep their blooms inline, so callers overlay
         commit stats on top of this map. Handles both formats: the
         round-8 per-commit shard manifest (dict) and the legacy
         monolithic blob (str)."""
-        ck = self._read_checkpoint()
         if not ck or not ck.get("blooms"):
             return {}
         v = ck["version"]
@@ -767,17 +831,11 @@ class LakehouseTable:
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         pdf.write.mode("errorifexists").parquet(str(commit_dir))
         files = self._written(commit_dir)
-        blooms: dict = {}
-        if bloom_cols:
-            phys = self._physical_of_logical()  # AFTER minting: re-adds resolve fresh
-            for bc in bloom_cols:
-                for f, bl in self._bloom_stats(commit_dir, files, phys.get(bc, bc)).items():
-                    blooms.setdefault(f, {})[f"__bloom__:{bc}"] = bl
         return self._commit_files(
             files,
             operation,
             stats_cols=stats_cols,
-            stats=blooms,
+            stats=self._blooms_for(commit_dir, files, bloom_cols or []),
             schema=commit_schema,
             txn=[txn[0], int(txn[1])] if txn else None,
         )
@@ -906,8 +964,8 @@ class LakehouseTable:
         """
         if when_matched not in ("update", "delete", "ignore"):
             raise ValueError(f"when_matched: {when_matched!r}")
-        read_version = self.latest_version()
-        current = self.snapshot()
+        snap = self.pin()
+        current = self._read(snap)
         ident_missing = [c for c in self.identity_columns() if c not in updates.columns]
         if ident_missing:
             # Delta identity semantics under MERGE: matched rows KEEP
@@ -994,17 +1052,17 @@ class LakehouseTable:
             merged = merged.unionByName(q, allowMissingColumns=schema_evolution)
         return self._commit_restate(
             merged, "merge", data_change=True, stats_cols=stats_cols,
-            read_version=read_version,
+            read_version=snap.version,
         )
 
     def delete_where(self, condition: str, stats_cols: list[str] | None = None) -> Commit:
         """Keyed/predicate delete (Delta DELETE analog): rewrite the
         snapshot without matching rows, commit as a restate point."""
-        read_version = self.latest_version()
-        remaining = self.snapshot().where(f"NOT ({condition})")
+        snap = self.pin()
+        remaining = self._read(snap).where(f"NOT ({condition})")
         return self._commit_restate(
             remaining, "delete", data_change=True, stats_cols=stats_cols,
-            read_version=read_version,
+            read_version=snap.version,
         )
 
     def delete_where_dv(self, condition: str) -> Commit:
@@ -1023,21 +1081,15 @@ class LakehouseTable:
         directory must not move (same caveat as Delta's absolute-path
         pins).
         """
-        read_version = self.latest_version()
-        files = self._files_for()
-        if not files:
-            raise ValueError("cannot delete from an empty table")
+        snap = self.pin()
         # logical names for the predicate (renamed tables), raw
         # _metadata for the positions — _apply_renames only touches
         # data columns, so file_path/row_index stay addressable
-        base = self._apply_renames(
-            self._read_data(*files)
-        )
-        matched = base.where(condition).select(
+        matched = self._dv_base(snap).where(condition).select(
             F_col("_metadata.file_path").alias("_dv_file"),
             F_col("_metadata.row_index").alias("_dv_pos"),
         )
-        return self._commit_dv(matched, read_version)
+        return self._commit_dv(matched, snap)
 
     def delete_keys_dv(self, keys: DataFrame, key_col: str) -> Commit:
         """Row-level DELETE by KEY SET via deletion vectors: semi-join
@@ -1051,14 +1103,11 @@ class LakehouseTable:
         one semi-join (broadcast while the key set is small) +
         O(matched rows) written as a DV parquet; keys matching nothing
         are a no-op, keys are deduplicated before the join."""
-        read_version = self.latest_version()
-        files = self._files_for()
-        if not files:
-            raise ValueError("cannot delete from an empty table")
+        snap = self.pin()
         # materialize the _metadata pseudo-columns BEFORE the join:
         # they resolve only against the scan relation itself, not
         # through a join (Spark drops unreferenced metadata columns)
-        base = self._apply_renames(self._read_data(*files)).withColumns(
+        base = self._dv_base(snap).withColumns(
             {
                 "_dv_file": F_col("_metadata.file_path"),
                 "_dv_pos": F_col("_metadata.row_index"),
@@ -1067,34 +1116,43 @@ class LakehouseTable:
         matched = base.join(
             keys.select(key_col).distinct(), on=key_col, how="left_semi"
         ).select("_dv_file", "_dv_pos")
-        return self._commit_dv(matched, read_version)
+        return self._commit_dv(matched, snap)
 
-    def _commit_dv(self, matched: DataFrame, read_version: int) -> Commit:
-        """Shared tail of the DV delete paths: drop positions already
-        deleted by live DVs, write the new DV parquet, publish."""
-        existing = self._live_dv_files()
-        if existing:
-            prior = self.spark.read.parquet(*[str(self.path / f) for f in existing])
-            matched = matched.join(prior, ["_dv_file", "_dv_pos"], "left_anti")
-        commit_dir = self.path / "data" / f"deletedv-{uuid.uuid4().hex[:12]}"
-        matched.write.parquet(str(commit_dir))
-        # DV positions were computed against read_version's file set; a
-        # concurrent commit may shift them -> _publish raises
-        return self._commit_files(
-            [], "delete_dv", base=read_version, dv_files=self._written(commit_dir)
+    def _dv_base(self, snap: Snapshot) -> DataFrame:
+        """Every live row of ``snap`` in logical names, DVs NOT
+        applied, ``_metadata`` still addressable — what a DV delete
+        matches its predicate against."""
+        if not snap.files:
+            raise ValueError("cannot delete from an empty table")
+        return self._apply_renames(
+            self._read_data([f for _c, f in snap.files], snap.schema), snap.meta
         )
 
-    def _live_dv_files(self, version: int | None = None) -> list[str]:
-        """DV parquet files active as of ``version`` (restates clear
-        them by construction: _live_commits starts at the base)."""
-        return [f for c in self._live_commits(version) for f in (c.dv_files or [])]
+    def _commit_dv(self, matched: DataFrame, snap: Snapshot) -> Commit:
+        """Shared tail of the DV delete paths: drop positions already
+        deleted by ``snap``'s DVs, write the new DV parquet, publish."""
+        if snap.dv_files:
+            matched = matched.join(
+                self._read_dvs(snap.dv_files), ["_dv_file", "_dv_pos"], "left_anti"
+            )
+        commit_dir = self.path / "data" / f"deletedv-{uuid.uuid4().hex[:12]}"
+        matched.write.parquet(str(commit_dir))
+        # DV positions were computed against snap's file set; a
+        # concurrent commit may shift them -> _publish raises
+        return self._commit_files(
+            [], "delete_dv", base=snap.version, dv_files=self._written(commit_dir)
+        )
 
-    def _apply_dvs(self, df: DataFrame, version: int | None = None) -> DataFrame:
+    def _read_dvs(self, dv_files) -> DataFrame:
+        return self.spark.read.schema(_DV_DDL).parquet(
+            *[str(self.path / f) for f in dv_files]
+        )
+
+    def _apply_dvs(self, df: DataFrame, dv_files) -> DataFrame:
         """Filter out DV'd rows: anti-join on (file path, row index)."""
-        dvs = self._live_dv_files(version)
-        if not dvs:
+        if not dv_files:
             return df
-        dv = self.spark.read.parquet(*[str(self.path / f) for f in dvs])
+        dv = self._read_dvs(dv_files)
         return (
             df.withColumn("_dv_file", F_col("_metadata.file_path"))
             .withColumn("_dv_pos", F_col("_metadata.row_index"))
@@ -1110,11 +1168,10 @@ class LakehouseTable:
         is the #1 lakehouse perf killer at scale). ``data_change`` is
         False — no logical rows change, so incremental readers skip it
         (Delta OPTIMIZE's dataChange=false)."""
-        read_version = self.latest_version()
-        snap = self.snapshot()
+        snap = self.pin()
         return self._commit_restate(
-            snap.repartition(target_partitions), "compact", data_change=False,
-            stats_cols=stats_cols, read_version=read_version,
+            self._read(snap).repartition(target_partitions), "compact",
+            data_change=False, stats_cols=stats_cols, read_version=snap.version,
         )
 
     def compact_files(
@@ -1134,39 +1191,40 @@ class LakehouseTable:
         sees the original files; vacuum reclaims them once the
         horizon passes. Files covered by deletion vectors refuse to
         compact here (position-keyed DVs don't survive a rewrite —
-        delete_where's restate path handles those).
+        delete_where's restate path handles those). Zone maps and
+        bloom filters are rebuilt for every column the bin's files
+        had them for.
         """
-        read_version = self.latest_version()  # the base the bin is planned on
-        owner = {f: c for c, f in self._live_files()}
+        snap = self.pin()  # the base the bin is planned on
+        owner = {f: c for c, f in snap.files}
         missing = [f for f in files_subset if f not in owner]
         if missing:
             raise ValueError(f"compact_files: not live: {missing}")
-        dv_touched = any(c.dv_files for c in self._live_commits())
-        if dv_touched:
+        if snap.dv_files:
             raise ValueError(
                 "compact_files: table has deletion vectors; position-keyed "
                 "DVs do not survive file rewrites — use delete_where/compact"
             )
-        # keep zone maps for every column the bin's files had them for
-        # (bloom descriptors are per-file membership sets; not rebuilt)
-        stats_cols = sorted(
-            {
-                k
-                for f in files_subset
-                for k in ((owner[f].stats or {}).get(f) or {})
-                if not k.startswith("__bloom__:")
-            }
-        )
-        combined = self._read_data(
-            *[str(self.path / f) for f in files_subset]
-        )
+        pairs = [(owner[f], f) for f in files_subset]
+        keys = {k for c, f in pairs for k in snap.file_stats(c, f, blooms=True)}
+        combined = self._read_data(files_subset, self._fold(snap.meta, pairs))
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         combined.repartition(1).write.mode("errorifexists").parquet(str(commit_dir))
+        files = self._written(commit_dir)
+        phys = self._physical_of_logical()
+        bloom_cols = [
+            k.split(":", 1)[1] for k in sorted(keys) if k.startswith("__bloom__:")
+        ]
         return self._commit_files(
-            self._written(commit_dir),
+            files,
             operation,
-            base=read_version,
-            stats_cols=stats_cols,
+            base=snap.version,
+            stats_cols=sorted(k for k in keys if not k.startswith("__bloom__:")),
+            stats=self._blooms_for(
+                commit_dir,
+                files,
+                [c for c in bloom_cols if phys.get(c, c) in combined.columns],
+            ),
             schema=self._ddl_of(combined),
             data_change=False,
             removed_files=sorted(files_subset),
@@ -1189,33 +1247,24 @@ class LakehouseTable:
         Accepts ``version`` or an epoch-seconds ``timestamp``
         (RESTORE ... TIMESTAMP AS OF).
         """
-        if timestamp is not None:
-            if version is not None:
-                raise ValueError("pass version OR timestamp, not both")
-            version = self.version_at_timestamp(timestamp)
-        if version is None:
+        if version is None and timestamp is None:
             raise ValueError("restore requires a version or timestamp")
-        self._check_horizon(version)
-        live = self._live_commits(version)
-        if not live:
+        snap = self.pin(version, timestamp=timestamp)
+        if not snap.commits:
             raise ValueError(f"no data at version {version}")
-        files = [f for c in live for f in c.files]
-        stats: dict = {}
-        for c in live:
-            if c.stats:
-                stats.update({f: c.stats[f] for f in c.files if f in c.stats})
-        dv_files = [f for c in live for f in (c.dv_files or [])]
+        stats = {f: st for c, f in snap.files if (st := snap.file_stats(c, f, blooms=True))}
         return self._publish(
             Commit(
                 version=self.latest_version() + 1,
-                files=files,
-                row_count=sum(c.row_count for c in live),
+                files=[f for _c, f in snap.files],
+                row_count=snap.rows + snap.dv_rows,
                 operation="restore",
                 stats=stats or None,
                 restate=True,
                 data_change=True,
-                dv_files=dv_files or None,
-                dv_row_count=sum(c.dv_row_count for c in live),
+                dv_files=list(snap.dv_files) or None,
+                dv_row_count=snap.dv_rows,
+                schema=snap.schema or None,
             )
         )
 
@@ -1241,9 +1290,9 @@ class LakehouseTable:
         from pyspark.sql import functions as F
 
         cols = key_cols + attr_cols
-        read_version = self.latest_version()
-        if self.latest_version() >= 0:
-            existing = self.snapshot().select(
+        snap = self.pin()
+        if snap.version >= 0:
+            existing = self._read(snap).select(
                 *cols, F.col("valid_from").alias(effective_col)
             )
             obs = existing.unionByName(updates.select(*cols, effective_col))
@@ -1251,7 +1300,7 @@ class LakehouseTable:
             obs = updates.select(*cols, effective_col)
         hist = scd2_history(obs, key_cols, attr_cols, effective_col)
         return self._commit_restate(
-            hist, operation="scd2", data_change=True, read_version=read_version
+            hist, operation="scd2", data_change=True, read_version=snap.version
         )
 
     def clone(
@@ -1284,51 +1333,48 @@ class LakehouseTable:
         to the clone's future writes). ``version`` clones a historical
         snapshot (time travel + clone in one step).
         """
-        self._check_horizon(version)
+        snap = self.pin(version)
         target = LakehouseTable(self.spark, target_path)
         if target.latest_version() >= 0:
             raise ValueError(f"clone target {target_path} is not empty")
         if shallow:
-            # removed-files-aware live set: partial rewrites
-            # (compact_files, incremental clustering) supersede files
-            # of EARLIER commits — cloning raw commit file lists would
-            # reference superseded files that the source's vacuum
-            # rightfully deletes later (interplay caught by
-            # tests/test_lifecycle.py::test_wave_ae_lifecycle)
-            pairs = self._live_files(version)
-            if not pairs:
+            # the snapshot's removed-files-aware live set: partial
+            # rewrites (compact_files, incremental clustering)
+            # supersede files of EARLIER commits — cloning raw commit
+            # file lists would reference superseded files that the
+            # source's vacuum rightfully deletes later (interplay
+            # caught by tests/test_lifecycle.py::test_wave_ae_lifecycle)
+            if not snap.files:
                 raise ValueError(f"no data at version {version}")
             files: list[str] = []
             stats: dict = {}
-            # checkpointed commits keep bloom descriptors in the
-            # side-car — fold them back so the clone's commit is
-            # self-contained (it has no access to the SOURCE's
-            # checkpoint; losing blooms here would silently cost the
-            # clone its point-lookup skipping)
-            side = self._ckpt_blooms()
-            for c, f in pairs:
+            for c, f in snap.files:
                 ab = str((self.path / f).resolve())
                 files.append(ab)
-                merged = {**side.get(f, {}), **(c.stats or {}).get(f, {})}
+                # side-car blooms folded back: the clone has no access
+                # to the SOURCE's checkpoint, and losing them would
+                # silently cost it its point-lookup skipping
+                merged = snap.file_stats(c, f, blooms=True)
                 if merged:
                     stats[ab] = merged
-            dv_files = [
-                str((self.path / f).resolve())
-                for f in self._live_dv_files(version)
-            ]
+            dv_files = [str((self.path / f).resolve()) for f in snap.dv_files]
             # put-if-absent, never a bare write: a writer that landed
             # v0 after the emptiness check keeps its commit (clone
             # raises), and a crash cannot leave torn JSON at v0
             target._create(
                 target._describe(
-                    files, "clone_shallow", stats=stats, dv_files=dv_files or None
+                    files,
+                    "clone_shallow",
+                    stats=stats,
+                    dv_files=dv_files or None,
+                    schema=snap.schema or None,
                 )
             )
         else:
             # deep clone materializes the snapshot, which already
             # surfaces LOGICAL names — its files need no mapping
-            target.append(self.snapshot(version), operation="clone_deep")
-        src_meta = self._read_meta()
+            target.append(self._read(snap), operation="clone_deep")
+        src_meta = snap.meta
         meta = target._read_meta()
         # identity carries WITH its allocated high-water mark — a
         # clone that restarted allocation at 0 would mint colliding
@@ -1395,8 +1441,8 @@ class LakehouseTable:
         """
         from pyspark.sql import functions as F
 
-        read_version = self.latest_version()
-        snap = self.snapshot()
+        pinned = self.pin()
+        snap = self._read(pinned)
         b = snap.agg(
             *[F.min(c).cast("double").alias(f"lo_{c}") for c in cols],
             *[F.max(c).cast("double").alias(f"hi_{c}") for c in cols],
@@ -1437,7 +1483,7 @@ class LakehouseTable:
             data_change=False,
             stats_cols=stats_cols or cols,
             partition_by=["_zb"],
-            read_version=read_version,
+            read_version=pinned.version,
         )
 
     def hilbert_cluster(
@@ -1465,8 +1511,8 @@ class LakehouseTable:
         """
         from pyspark.sql import functions as F
 
-        read_version = self.latest_version()
-        snap = self.snapshot()
+        pinned = self.pin()
+        snap = self._read(pinned)
         b = snap.agg(
             *[F.min(c).cast("double").alias(f"lo_{c}") for c in cols],
             *[F.max(c).cast("double").alias(f"hi_{c}") for c in cols],
@@ -1481,7 +1527,7 @@ class LakehouseTable:
             data_change=False,
             stats_cols=stats_cols or cols,
             partition_by=["_hb"],
-            read_version=read_version,
+            read_version=pinned.version,
         )
         # persist the clustering spec (cols + GRID BOUNDS) so
         # incremental reclustering keys new data on the SAME grid —
@@ -1567,22 +1613,19 @@ class LakehouseTable:
         spec = meta.get("clustering")
         if not spec:
             raise ValueError("hilbert_cluster_incremental: run hilbert_cluster first")
-        read_version = self.latest_version()  # the base the rewrite is planned on
-        if any(c.dv_files for c in self._live_commits()):
+        snap = self.pin()  # the base the rewrite is planned on
+        if snap.dv_files:
             raise ValueError(
                 "hilbert_cluster_incremental: table has deletion vectors; "
                 "use delete_where/compact first"
             )
-        new_files = [
-            f for c, f in self._live_files() if c.version > spec["version"]
-        ]
-        if not new_files:
+        pairs = [(c, f) for c, f in snap.files if c.version > spec["version"]]
+        if not pairs:
             return None
+        new_files = [f for _c, f in pairs]
         cols = spec["cols"]
-        raw = self._read_data(
-            *[str(self.path / f) for f in new_files]
-        )
-        df = self._apply_renames(raw)
+        raw = self._read_data(new_files, self._fold(snap.meta, pairs))
+        df = self._apply_renames(raw, snap.meta)
         clustered = self._hilbert_bucketed(
             df, cols, spec["bounds"], spec["target_partitions"]
         )
@@ -1598,7 +1641,7 @@ class LakehouseTable:
         out = self._commit_files(
             self._written(commit_dir),
             "hilbert_cluster_incr",
-            base=read_version,
+            base=snap.version,
             stats_cols=stats_cols or cols,
             schema=self._ddl_of(pclustered, ["_hb"]),
             data_change=False,
@@ -1612,7 +1655,7 @@ class LakehouseTable:
 
     # -- reads ---------------------------------------------------------------
 
-    def _live_commits(self, version: int | None = None) -> list[Commit]:
+    def _live_commits(self, version: int | None = None, ck=...) -> list[Commit]:
         """Commits whose files are live as of ``version``: the latest
         restate (merge/delete/compact full rewrite) is the base, plus
         every append after it. Pre-restate appends are superseded.
@@ -1621,8 +1664,10 @@ class LakehouseTable:
         the checkpoint + commits (C, version] only — a long-lived
         table with 10⁵ commits plans from the last checkpoint's state,
         not 10⁵ JSON reads. Time travel BELOW the checkpoint takes the
-        full-history path (rare, audit-grade)."""
-        ck = self._read_checkpoint()
+        full-history path (rare, audit-grade). ``ck``: the checkpoint
+        already read by the caller (default: read it here)."""
+        if ck is ...:
+            ck = self._read_checkpoint()
         if ck is not None and (version is None or version >= ck["version"]):
             commits = [self._commit_of(dict(d)) for d in ck["live_commits"]]
             commits += self._commits_between(ck["version"], version)
@@ -1657,18 +1702,99 @@ class LakehouseTable:
         return commits
 
     def _live_files(self, version: int | None = None) -> list[tuple["Commit", str]]:
-        """(commit, file) pairs live as of ``version``: the restate-
-        aware commit chain minus files any in-window commit REMOVED
-        (partial rewrites — Delta RemoveFile semantics)."""
-        commits = self._live_commits(version)
-        removed: set[str] = set()
-        for c in commits:
-            removed.update(c.removed_files or [])
+        return self._pairs(self._live_commits(version))
+
+    @staticmethod
+    def _pairs(commits: list[Commit]) -> list[tuple["Commit", str]]:
+        """(commit, file) pairs live in a commit chain: its files
+        minus those any commit in it REMOVED (partial rewrites —
+        Delta RemoveFile semantics)."""
+        removed = {f for c in commits for f in c.removed_files or []}
         return [(c, f) for c in commits for f in c.files if f not in removed]
 
-    def _files_for(self, version: int | None = None) -> list[str]:
-        """Live file list for a snapshot as of ``version``."""
-        return [str(self.path / f) for _c, f in self._live_files(version)]
+    def pin(
+        self,
+        version: int | None = None,
+        *,
+        timestamp: float | None = None,
+        tag: str | None = None,
+        branch: str | None = None,
+    ) -> Snapshot:
+        """Resolve a read ONCE into an immutable :class:`Snapshot`:
+        as of ``version`` (None = the current head), an epoch-seconds
+        ``timestamp`` (TIMESTAMP AS OF), a named ``tag`` (VERSION AS
+        OF 'ref') or a ``branch`` (main's live set at the fork point
+        plus the branch's own commits). Pass at most one. The ref
+        lookup, the vacuum-horizon check, the log replay, the schema
+        fold and the ``_meta.json`` read each happen here exactly
+        once; every read of the result sees that one version."""
+        if sum(x is not None for x in (version, timestamp, tag, branch)) > 1:
+            raise ValueError("pass at most one of version, timestamp, tag, branch")
+        meta = self._read_meta()
+        if tag is not None:
+            known = meta.get("tags", {})
+            if tag not in known:
+                raise ValueError(f"unknown tag {tag!r}; have {sorted(known)}")
+            version = known[tag]
+        elif timestamp is not None:
+            version = self.version_at_timestamp(timestamp)
+        own: list[Commit] = []
+        if branch is not None:
+            brs = meta.get("branches", {})
+            if branch not in brs:
+                raise ValueError(f"unknown branch {branch!r}")
+            version = brs[branch]["fork_version"]
+            own = self._branch_commits(branch)
+        self._check_horizon(version, meta)
+        if version is None:
+            version = self.latest_version()
+        ck = self._read_checkpoint()
+        commits = self._live_commits(version, ck) + own
+        pairs = self._pairs(commits)
+        return Snapshot(
+            version=own[-1].version if own else version,
+            commits=tuple(commits),
+            files=tuple(pairs),
+            dv_files=tuple(f for c in commits for f in c.dv_files or []),
+            schema=self._fold(meta, pairs, commits),
+            meta=meta,
+            blooms=lambda: self._ckpt_blooms(ck),
+        )
+
+    def _read(
+        self, snap: Snapshot, keep: Callable[[Commit, str], bool] | None = None
+    ) -> DataFrame:
+        """THE snapshot reader: the files of ``snap`` that ``keep``
+        keeps (default: all), read with the snapshot's recorded
+        schema (Spark infers nothing), its deletion vectors applied
+        and its renames mapped to logical names. Zero kept files give
+        an empty frame in the same schema."""
+        files = [f for c, f in snap.files if keep is None or keep(c, f)]
+        if files:
+            df = self._apply_dvs(self._read_data(files, snap.schema), snap.dv_files)
+        elif snap.schema:
+            # a truncating overwrite leaves zero live files but a
+            # commit-recorded schema — the table is EMPTY, not absent
+            df = self.spark.createDataFrame([], _ddl(snap.schema))
+        else:
+            raise ValueError(f"no data at version {snap.version}")
+        return self._apply_renames(df, snap.meta)
+
+    def _pruned(
+        self, snap: Snapshot, keep: Callable[[Commit, str], bool]
+    ) -> tuple[DataFrame, int, int]:
+        """Shared skeleton of the file-skipping scans: read the files
+        ``keep`` keeps; returns (df, files_scanned, files_total)."""
+        kept = {f for c, f in snap.files if keep(c, f)}
+        return self._read(snap, lambda _c, f: f in kept), len(kept), len(snap.files)
+
+    @staticmethod
+    def _overlaps(st, lo, hi) -> bool:
+        """Zone-map test: may a file with stats ``st`` ([min, max])
+        hold a value in [lo, hi]? Missing stats or a None bound (e.g.
+        a NULL partition value) keep the file — skipping must be
+        safe."""
+        return st is None or st[0] is None or st[1] is None or not (hi < st[0] or lo > st[1])
 
     def version_at_timestamp(self, ts: float) -> int:
         """Newest version committed at or before epoch-seconds ``ts``
@@ -1785,15 +1911,7 @@ class LakehouseTable:
         """Read a branch: main's live files as of the fork point plus
         every branch commit — main writes after the fork are NOT
         visible (snapshot isolation per ref)."""
-        brs = self.branches()
-        if name not in brs:
-            raise ValueError(f"unknown branch {name!r}")
-        fork = brs[name]["fork_version"]
-        files = self._files_for(fork) + [
-            str(self.path / f) for c in self._branch_commits(name) for f in c.files
-        ]
-        df = self._read_data(*files)
-        return self._apply_renames(self._apply_dvs(df, fork))
+        return self._read(self.pin(branch=name))
 
     def drop_branch(self, name: str) -> int:
         """Abandon a branch: delete its ref, commit chain, and the
@@ -1863,36 +1981,13 @@ class LakehouseTable:
     ) -> DataFrame:
         """Read the table as of ``version`` (time travel; None=latest),
         as of an epoch-seconds ``timestamp`` (TIMESTAMP AS OF), or as
-        of a named ``tag`` (VERSION AS OF 'ref').
-        Committed == readable — §2a ops 31-32 dissolve here.
+        of a named ``tag`` (VERSION AS OF 'ref') — :meth:`pin`, then
+        read. Committed == readable — §2a ops 31-32 dissolve here.
 
-        mergeSchema: commits may evolve the schema (add columns);
-        older files surface NULLs for columns they predate — additive
-        schema evolution like Delta/Iceberg."""
-        if tag is not None:
-            if version is not None or timestamp is not None:
-                raise ValueError("pass version, timestamp, OR tag")
-            known = self.tags()
-            if tag not in known:
-                raise ValueError(f"unknown tag {tag!r}; have {sorted(known)}")
-            version = known[tag]
-        if timestamp is not None:
-            if version is not None:
-                raise ValueError("pass version OR timestamp, not both")
-            version = self.version_at_timestamp(timestamp)
-        self._check_horizon(version)
-        files = self._files_for(version)
-        if not files:
-            # a truncating overwrite leaves zero live files but a
-            # commit-recorded schema — the table is EMPTY, not absent
-            empty = self._empty_snapshot(version)
-            if empty is not None:
-                return empty
-            raise ValueError(f"no data at version {version}")
-        df = self._read_data(
-            *files, unified=lambda: self._unified_live_schema(version)
-        )
-        return self._apply_renames(self._apply_dvs(df, version))
+        Commits may evolve the schema (add columns); older files
+        surface NULLs for columns they predate — additive schema
+        evolution like Delta/Iceberg."""
+        return self._read(self.pin(version, timestamp=timestamp, tag=tag))
 
     def scan_pruned(self, col: str, lo, hi) -> tuple[DataFrame, int, int]:
         """Range scan with zone-map file skipping: only files whose
@@ -1902,40 +1997,18 @@ class LakehouseTable:
 
         Scale: at 100 TB with time- or key-sorted ingest this is the
         difference between scanning one commit and the whole table;
-        the residual predicate still applies row-level.
+        the residual predicate still applies row-level (on the
+        logical column, so renamed tables' older vintages match).
         """
-        all_files: list[str] = []
-        kept: list[tuple[Commit, str]] = []
-        keys = self._stat_keys(col)  # logical name + rename-chain vintages
-        for c, f in self._live_files():
-            all_files.append(f)
-            fstats = (c.stats or {}).get(f, {})
-            st = next((fstats[k] for k in keys if k in fstats), None)
-            # a None bound means no usable stats (e.g. a NULL partition
-            # value) — keep the file, skipping must be safe
-            if (
-                st is None
-                or st[0] is None
-                or st[1] is None
-                or not (hi < st[0] or lo > st[1])
-            ):
-                kept.append((c, f))
-        if not kept:
-            return self.snapshot().limit(0), 0, len(all_files)
-        # mergeSchema + renames: pre-rename files carry the old
-        # physical column name; the logical-name residual predicate
-        # must see the coalesced logical column (same as snapshot /
-        # scan_pruned_hidden), else renamed-table scans error or drop
-        # pre-rename rows.
-        df = self._apply_renames(
-            self._apply_dvs(
-                self._read_data(
-                    *[str(self.path / f) for _c, f in kept],
-                    unified=lambda: self._unified_schema_for(kept),
-                )
-            )
-        ).where((F_col(col) >= lo) & (F_col(col) <= hi))
-        return df, len(kept), len(all_files)
+        snap = self.pin()
+        keys = self._stat_keys(col, snap.meta)  # logical name + rename-chain vintages
+
+        def keep(c, f):
+            fstats = snap.file_stats(c, f)
+            return self._overlaps(next((fstats[k] for k in keys if k in fstats), None), lo, hi)
+
+        df, n, total = self._pruned(snap, keep)
+        return df.where((F_col(col) >= lo) & (F_col(col) <= hi)), n, total
 
     def scan_pruned_box(
         self, preds: dict[str, tuple]
@@ -1948,35 +2021,20 @@ class LakehouseTable:
         every listed axis's zone maps tight simultaneously.  Files
         with missing stats on any axis are kept (skipping is safe).
         Returns (df, files_scanned, files_total)."""
-        all_files: list[str] = []
-        kept: list[tuple[Commit, str]] = []
-        keys = {c: self._stat_keys(c) for c in preds}
-        for c, f in self._live_files():
-            all_files.append(f)
-            fstats = (c.stats or {}).get(f, {})
-            keep = True
-            for col, (lo, hi) in preds.items():
-                st = next((fstats[k] for k in keys[col] if k in fstats), None)
-                if st is None or st[0] is None or st[1] is None:
-                    continue  # no stats on this axis: cannot skip
-                if hi < st[0] or lo > st[1]:
-                    keep = False
-                    break
-            if keep:
-                kept.append((c, f))
-        if not kept:
-            return self.snapshot().limit(0), 0, len(all_files)
-        df = self._apply_renames(
-            self._apply_dvs(
-                self._read_data(
-                    *[str(self.path / f) for _c, f in kept],
-                    unified=lambda: self._unified_schema_for(kept),
-                )
+        snap = self.pin()
+        keys = {c: self._stat_keys(c, snap.meta) for c in preds}
+
+        def keep(c, f):
+            fstats = snap.file_stats(c, f)
+            return all(
+                self._overlaps(next((fstats[k] for k in keys[col] if k in fstats), None), lo, hi)
+                for col, (lo, hi) in preds.items()
             )
-        )
+
+        df, n, total = self._pruned(snap, keep)
         for col, (lo, hi) in preds.items():
             df = df.where((F_col(col) >= lo) & (F_col(col) <= hi))
-        return df, len(kept), len(all_files)
+        return df, n, total
 
     def read_changes(
         self, since_version: int, upto_version: int | None = None
@@ -2010,24 +2068,23 @@ class LakehouseTable:
                 f"cursor v{since_version} predates logical restate(s) {ops}; "
                 "restart from a fresh snapshot"
             )
-        files = [
-            str(self.path / f)
-            for c in newer
-            if not c.restate and c.data_change
-            for f in c.files
+        pairs = [
+            (c, f) for c in newer if not c.restate and c.data_change for f in c.files
         ]
-        missing = [f for f in files if not Path(f).exists()]
+        missing = [f for _c, f in pairs if not (self.path / f).exists()]
         if missing:
             raise VacuumHorizonError(
                 f"cursor v{since_version} needs {len(missing)} vacuumed file(s); "
                 "restart from a fresh snapshot"
             )
-        if not files:
-            return self.snapshot().limit(0)
-        # logical names, like snapshot/scan_pruned: incremental readers
-        # must see the same schema the batch readers see
+        if not pairs:
+            return self._read(self.pin(), lambda _c, _f: False)
+        # the window's own recorded schemas; logical names, like
+        # snapshot/scan_pruned: incremental readers must see the same
+        # names the batch readers see
+        meta = self._read_meta()
         return self._apply_renames(
-            self._read_data(*files)
+            self._read_data([f for _c, f in pairs], self._fold(meta, pairs)), meta
         )
 
     def read_changes_cdf(
@@ -2070,10 +2127,9 @@ class LakehouseTable:
             # Rows living in a compacted file surface under the
             # compacting commit (the logical insert version is not
             # recoverable post-compaction, as in Delta).
-            self._check_horizon(upto_version)
-            pairs0 = self._live_files(upto_version)
-            if not pairs0:
-                raise ValueError("no data at version None")
+            snap = self.pin(upto_version)
+            if not snap.files:
+                raise ValueError(f"no data at version {snap.version}")
             # Join on the file's SUFFIX identity (last two path
             # components: commit dir + file name — both writer-
             # generated, uuid-bearing, unique within a table, and
@@ -2088,7 +2144,7 @@ class LakehouseTable:
             # paths still feed _read_data (relative-path tables scan
             # correctly); only the join key is suffix-normalized.
             scan_paths = [
-                os.path.abspath(str(self.path / f)) for _c, f in pairs0
+                os.path.abspath(str(self.path / f)) for _c, f in snap.files
             ]
             ver_rows = [
                 (
@@ -2096,9 +2152,9 @@ class LakehouseTable:
                     c.version,
                     ts_micros(c.ts),
                 )
-                for (c, _f), p in zip(pairs0, scan_paths)
+                for (c, _f), p in zip(snap.files, scan_paths)
             ]
-            scan = self._read_data(*scan_paths).withColumn(
+            scan = self._read_data(scan_paths, snap.schema).withColumn(
                 "_cdf_path",
                 F.array_join(
                     F.slice(
@@ -2119,8 +2175,8 @@ class LakehouseTable:
                 # after upto_version must not filter this load, and a
                 # restate after it must not drop a DV that WAS live at
                 # the bound (the contract is load == time-traveled
-                # snapshot, same as snapshot()'s _apply_dvs(df, v)).
-                self._apply_dvs(scan, upto_version)
+                # snapshot: the same pinned DV set).
+                self._apply_dvs(scan, snap.dv_files)
                 .join(F.broadcast(vmap), "_cdf_path")
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn(
@@ -2134,7 +2190,7 @@ class LakehouseTable:
                     "_commit_timestamp",
                 )
             )
-            return self._apply_renames(out0)
+            return self._apply_renames(out0, snap.meta)
         self._check_log_window(since_version)
         # O(tail) cursor: parse only commits past the cursor (the same
         # cost class the checkpointed writer uses) — an incremental
@@ -2148,6 +2204,7 @@ class LakehouseTable:
                 "restart from a fresh snapshot"
             )
         parts: list[DataFrame] = []
+        meta = self._read_meta()
 
         def _ts_col(c: Commit):
             us = ts_micros(c.ts)
@@ -2159,7 +2216,7 @@ class LakehouseTable:
             if c.restate or not c.data_change:
                 continue  # compaction (full or partial): no logical change
             if c.dv_files:
-                dv = self.spark.read.parquet(*[str(self.path / f) for f in c.dv_files])
+                dv = self._read_dvs(c.dv_files)
                 # scan ONLY the files this DV references — a DV
                 # deleting rows in 2 files of a 10⁵-file snapshot must
                 # not re-scan the snapshot. The distinct referenced-
@@ -2177,8 +2234,8 @@ class LakehouseTable:
                 if not base_files:
                     # a predicate that matched NOTHING still commits a
                     # (zero-row) DV file; there are no deleted rows to
-                    # emit — and _read_data(*[]) would die on schema
-                    # inference (found by the r9 stream-fuzz harness:
+                    # emit — and a read of zero files would fail
+                    # (found by the r9 stream-fuzz harness:
                     # the STREAMING feed handled empty DVs, the native
                     # oracle crashed on them)
                     continue
@@ -2187,8 +2244,9 @@ class LakehouseTable:
                     raise VacuumHorizonError(
                         f"cursor v{since_version} needs {len(missing)} vacuumed file(s)"
                     )
+                # no owning commit in hand for these: footer fold
                 deleted = (
-                    self._read_data(*base_files)
+                    self._read_data(base_files, self._fold(meta, [(None, f) for f in base_files]))
                     .withColumn("_dv_file", F_col("_metadata.file_path"))
                     .withColumn("_dv_pos", F_col("_metadata.row_index"))
                     .join(dv, ["_dv_file", "_dv_pos"], "left_semi")
@@ -2210,8 +2268,9 @@ class LakehouseTable:
                     raise VacuumHorizonError(
                         f"cursor v{since_version} needs {len(missing)} vacuumed file(s)"
                     )
+                pairs = [(c, f) for f in c.files]
                 parts.append(
-                    self._read_data(*files)
+                    self._read_data(c.files, self._fold(meta, pairs))
                     .withColumns(
                         {
                             "_change_type": F.lit("insert"),
@@ -2221,7 +2280,7 @@ class LakehouseTable:
                     )
                 )
         if not parts:
-            return self.snapshot().limit(0).withColumns(
+            return self._read(self.pin(), lambda _c, _f: False).withColumns(
                 {
                     "_change_type": F.lit("insert"),
                     "_commit_version": F.lit(0).cast("int"),
@@ -2231,14 +2290,13 @@ class LakehouseTable:
         out = parts[0]
         for q in parts[1:]:
             out = out.unionByName(q, allowMissingColumns=True)
-        return self._apply_renames(out)
+        return self._apply_renames(out, meta)
 
     def total_rows_committed(self, version: int | None = None) -> int:
-        """Counter-metric twin (§2a op 35): log-recorded row totals of
-        the live snapshot (restate base + later appends), for
+        """Counter-metric twin (§2a op 35): log-recorded live row
+        total of the snapshot (:attr:`Snapshot.rows`), for
         rows_written == rows_read invariants without a scan."""
-        live = self._live_commits(version)
-        return sum(c.row_count for c in live) - sum(c.dv_row_count for c in live)
+        return self.pin(version).rows
 
     # -- table metadata (constraints, vacuum horizon) ------------------------
 
@@ -2326,7 +2384,7 @@ class LakehouseTable:
         if self.latest_version() >= 0:
             # Delta's rule: identity columns exist only from CREATE
             # TABLE — declaring one later would leave every existing
-            # row reading NULL through mergeSchema, silently breaking
+            # row reading NULL for it, silently breaking
             # the uniqueness contract
             raise ValueError(
                 "identity columns must be declared before the first write "
@@ -2681,14 +2739,7 @@ class LakehouseTable:
             if name not in cols:
                 raise ValueError(f"widen_column: no column {name!r}; have {cols}")
         phys = self._physical_of_logical().get(name, name)
-        current = None
-        for f in self._files_for():
-            import pyarrow.parquet as pq
-
-            sch = pq.read_schema(f)
-            if phys in sch.names:
-                current = self._pa_ddl(sch.field(phys).type)
-                break
+        current = self.pin().schema.get(phys)
         meta = self._read_meta()
         prior = (meta.get("widenings") or {}).get(phys)
         src = prior or current
@@ -2748,7 +2799,6 @@ class LakehouseTable:
         sources,
         dropped: set[str],
         wid: dict[str, str],
-        opaque_ok: bool = False,
     ) -> dict[str, str]:
         """Fold per-source PHYSICAL schemas into the table's unified
         schema ({col: ddl}). ``sources`` yields (label, {col: ddl})
@@ -2756,10 +2806,9 @@ class LakehouseTable:
         Mixed vintages are legal only when both sides widen to the
         declared target or one widens to the other; anything else
         raises NAMING the offending source (the corruption
-        ``verify()``/write enforcement exist to catch). With
-        ``opaque_ok`` nested types the DDL mapper can't express fold
-        by exact-string equality and never conflict (mergeSchema owns
-        them); without it they raise as before."""
+        ``verify()``/write enforcement exist to catch). Footer types
+        marked opaque (nested types) fold by exact-string equality
+        and never conflict: the first vintage seen wins."""
         fields: dict[str, str] = {}
         first: dict[str, str] = {}
         for label, sch in sources:
@@ -2770,9 +2819,9 @@ class LakehouseTable:
                 if prev is None:
                     fields[name] = ddl
                     first[name] = label
-                elif prev != ddl:
-                    if prev.startswith("__opaque__") or ddl.startswith("__opaque__"):
-                        continue  # nested types: mergeSchema decides
+                elif prev.lower() != ddl.lower():  # older logs lowercased nested names
+                    if prev.startswith(_OPAQUE) or ddl.startswith(_OPAQUE):
+                        continue
                     target = wid.get(name)
                     if target and self._widens_to(prev, target) and self._widens_to(ddl, target):
                         fields[name] = target
@@ -2786,14 +2835,17 @@ class LakehouseTable:
                             f"(first seen in {first[name]}) vs {ddl} (in {label})"
                         )
         for phys, target in wid.items():
-            if phys in fields and not fields[phys].startswith("__opaque__"):
+            if phys in fields and not fields[phys].startswith(_OPAQUE):
                 fields[phys] = target
-        return fields
+        return {n: t.removeprefix(_OPAQUE) for n, t in fields.items()}
 
-    def _footer_schema_sources(self, files, opaque_ok: bool = False):
+    def _footer_schema_sources(self, files):
         """(file, {col: ddl}) per parquet footer — driver-side
-        metadata reads only, O(len(files)), no Spark job."""
+        metadata reads only, O(len(files)), no Spark job. Nested
+        types the DDL mapper cannot express come back opaque, in
+        Spark's own rendering of the Arrow type."""
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
 
         for f in files:
             sch = {}
@@ -2801,64 +2853,25 @@ class LakehouseTable:
                 try:
                     sch[fld.name] = self._pa_ddl(fld.type)
                 except ValueError:
-                    if not opaque_ok:
-                        raise
-                    sch[fld.name] = f"__opaque__:{fld.type}"
+                    sch[fld.name] = _OPAQUE + from_arrow_type(fld.type).simpleString()
             yield str(f), sch
 
-    def _unified_live_schema(self, version: int | None = None) -> dict[str, str]:
-        """The table's current unified PHYSICAL schema, from commit-
-        recorded schemas where present (O(live commits) — already-
-        parsed log JSON) with parquet-footer fallback for legacy
-        commits. Nested types fold opaquely (exact-match only)."""
-        meta = self._read_meta()
-        dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
-        wid = meta.get("widenings") or {}
-
-        def _sources():
-            legacy: list[str] = []
-            for c in self._live_commits(version):
-                if c.schema is not None:
-                    yield f"commit v{c.version}", c.schema
-                else:
-                    legacy.extend(
-                        f if f.startswith("/") else str(self.path / f)
-                        for f in c.files
-                    )
-            yield from self._footer_schema_sources(legacy, opaque_ok=True)
-
-        return self._fold_schemas(_sources(), dropped, wid, opaque_ok=True)
-
-    def _unified_schema_for(
-        self, pairs: list[tuple["Commit", str]]
-    ) -> dict[str, str]:
-        """Unified PHYSICAL schema covering exactly these (owning
-        commit, file) pairs — the SUBSET-reader twin of
-        :meth:`_unified_live_schema`: each kept file's owning commit
-        already sits in the pruning loop's hand, so its RECORDED
-        schema covers the file with zero footer GETs (on object
-        storage a point lookup keeping 50 files used to pay 50 footer
-        reads it didn't need). Footer fallback only for legacy
-        commits that predate schema recording."""
-        meta = self._read_meta()
-        dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
-        wid = meta.get("widenings") or {}
-
-        def _sources():
-            legacy: list[str] = []
-            seen: set[int] = set()
-            for c, f in pairs:
-                if c.schema is not None:
-                    if c.version not in seen:
-                        seen.add(c.version)
-                        yield f"commit v{c.version}", c.schema
-                else:
-                    legacy.append(
-                        f if f.startswith("/") else str(self.path / f)
-                    )
-            yield from self._footer_schema_sources(legacy, opaque_ok=True)
-
-        return self._fold_schemas(_sources(), dropped, wid, opaque_ok=True)
+    def _fold(self, meta: dict, pairs, commits=None) -> dict[str, str]:
+        """THE schema fold of every read: the recorded schema of each
+        of ``commits`` (default: the owners of ``pairs``), plus the
+        parquet footers of the ``pairs`` files whose owning commit
+        records none (legacy logs, or None: no owner in hand).
+        Dropped physicals are excluded and widening targets applied,
+        per ``meta``."""
+        if commits is None:
+            commits = list({id(c): c for c, _f in pairs if c is not None}.values())
+        recorded = [(f"commit v{c.version}", c.schema) for c in commits if c.schema is not None]
+        legacy = [str(self.path / f) for c, f in pairs if c is None or c.schema is None]
+        return self._fold_schemas(
+            [*recorded, *self._footer_schema_sources(legacy)],
+            {d["physical"] for d in meta.get("dropped_columns", [])},
+            meta.get("widenings") or {},
+        )
 
     def _check_append_types(self, incoming: dict[str, str]) -> dict[str, str]:
         """Write-time schema ENFORCEMENT (the Delta write-path
@@ -2866,30 +2879,30 @@ class LakehouseTable:
         evolution, the documented contract); a NARROWER incoming type
         is implicitly upcast to the table's (Delta's safe-cast write —
         the returned {col: target_ddl} tells the writer what to cast,
-        keeping every vintage's physical type identical so the
-        mergeSchema fast path stays valid); a WIDER or CONFLICTING
-        type raises BEFORE any file lands, table unchanged. Without
-        this, a mistyped append COMMITS and every subsequent
-        ``snapshot()`` dies with CANNOT_MERGE_SCHEMAS (found by the
-        r5 judge). ``incoming`` is {physical_col: spark_ddl}.
+        keeping every vintage's physical type identical); a WIDER or
+        CONFLICTING type raises BEFORE any file lands, table
+        unchanged. Without this, a mistyped append COMMITS and every
+        subsequent ``snapshot()`` dies on irreconcilable vintages
+        (found by the r5 judge). ``incoming`` is {physical_col:
+        spark_ddl}.
 
         Reference analog: fixed declared schemas on every record type
         (lakehouse-test ``Person.java:10-17``)."""
         if self.latest_version() < 0:
             return {}
-        table = self._unified_live_schema()
+        table = self.pin().schema
         upcasts: dict[str, str] = {}
         for name, ddl in incoming.items():
             cur = table.get(name)
-            if cur is None or cur.startswith("__opaque__"):
-                continue  # additive column / nested type (can't reason)
+            if cur is None:
+                continue  # additive column
             ddl = ddl.strip().lower()
             if ddl == cur:
                 continue
             if ddl.startswith(("struct<", "map<")) or cur.startswith(
                 ("struct<", "map<")
             ):
-                continue  # deep-nested: mergeSchema owns the verdict
+                continue  # deep-nested: no widening rule to apply
             # arrays reconcile element-wise; scalars directly
             a, b = ddl, cur
             if ddl.startswith("array<") and cur.startswith("array<"):
@@ -2922,65 +2935,17 @@ class LakehouseTable:
                 )
         return upcasts
 
-    def _recorded_schema(self, version: int | None = None) -> dict | None:
-        """Newest commit-recorded schema live as of ``version`` (the
-        empty-table read path: a truncating restate carries the schema
-        its zero data files can't)."""
-        for c in reversed(self._live_commits(version)):
-            if c.schema is not None:
-                return c.schema
-        return None
-
-    def _empty_snapshot(self, version: int | None = None) -> DataFrame | None:
-        """Zero-live-file snapshot (truncating overwrite): an empty
-        DataFrame in the commit-recorded schema, renames/drops/
-        widenings applied — or None when no schema was ever recorded
-        (legacy log), letting the caller keep its historical error."""
-        sch = self._recorded_schema(version)
-        if sch is None:
-            return None
-        meta = self._read_meta()
-        dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
-        wid = meta.get("widenings") or {}
-        ddl = ", ".join(
-            f"`{n}` {wid.get(n, t)}" for n, t in sch.items() if n not in dropped
+    def _read_data(self, files, schema: dict) -> DataFrame:
+        """Every data-file read routes through here: explicit files
+        (table-relative or absolute), explicit PHYSICAL schema — so
+        Spark infers nothing and plans without a job. Columns a file
+        lacks read NULL (additive evolution), dropped physicals are
+        absent from the schema (projected away, data retained), and
+        widened columns upcast at scan (Spark 4's parquet readers
+        read an INT32 page into a BIGINT column)."""
+        return self.spark.read.schema(_ddl(schema)).parquet(
+            *[str(self.path / f) for f in files]
         )
-        return self._apply_renames(self.spark.createDataFrame([], ddl))
-
-    def _read_data(self, *files: str, unified: dict | None = None) -> DataFrame:
-        """Every data-file read routes through here. Fast path: plain
-        mergeSchema. Once the table has DROPPED or WIDENED columns,
-        reads switch to an EXPLICIT unified schema — dropped physicals
-        excluded (projection, data retained), widened targets applied
-        (Spark's parquet reader upcasts old vintages at scan), missing
-        columns null-filled.
-
-        ``unified``: a pre-folded {col: ddl} (or a thunk returning
-        one, evaluated only on the evolved path) covering exactly
-        these files (FULL-set readers pass ``_unified_live_schema``;
-        SUBSET readers — scan_pruned/scan_point/scan_pruned_box/
-        scan_pruned_hidden — pass ``_unified_schema_for`` over their
-        kept (commit, file) pairs: the owning commits' recorded
-        schemas cover the kept set with zero footer GETs). Footer
-        reads remain only for legacy commits lacking recorded schemas
-        and for opaque-folded entries (legacy nested vintages) not
-        expressible as read DDL."""
-        meta = self._read_meta()
-        dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
-        wid = meta.get("widenings") or {}
-        if not dropped and not wid:
-            return self.spark.read.option("mergeSchema", "true").parquet(*files)
-        fields = None
-        if unified is not None:
-            u = unified() if callable(unified) else unified
-            if not any(str(t).startswith("__opaque__") for t in u.values()):
-                fields = u
-        if fields is None:
-            fields = self._fold_schemas(
-                self._footer_schema_sources(files), dropped, wid
-            )
-        ddl = ", ".join(f"`{n}` {t}" for n, t in fields.items())
-        return self.spark.read.schema(ddl).parquet(*files)
 
     def _mint_readd_physicals(self, cols: list[str]) -> None:
         """Called on append (and driver-side by the DataSource write
@@ -3013,12 +2978,12 @@ class LakehouseTable:
                 df = df.withColumn(phys, F_col(phys).cast(target))
         return df
 
-    def _apply_renames(self, df: DataFrame) -> DataFrame:
+    def _apply_renames(self, df: DataFrame, meta: dict) -> DataFrame:
         from pyspark.sql import functions as F
 
-        for old, new in self._read_meta().get("column_renames", []):
+        for old, new in meta.get("column_renames", []):
             if old in df.columns and new in df.columns:
-                # mixed vintages under mergeSchema (tables written
+                # mixed vintages (tables written
                 # before stable physical names): each row has the
                 # value under exactly one physical name, NULL under
                 # the other — coalesce restores the logical column
@@ -3051,12 +3016,12 @@ class LakehouseTable:
                 df = df.withColumnRenamed(logical, physical)
         return self._apply_widenings_write(df)
 
-    def _stat_keys(self, col: str) -> set[str]:
+    def _stat_keys(self, col: str, meta: dict) -> set[str]:
         """All names a logical column's per-file stats may live under:
         itself plus every prior name in its rename chain (stats
         recorded before a rename keep their vintage's key)."""
         keys = {col}
-        for old, new in reversed(self._read_meta().get("column_renames", [])):
+        for old, new in reversed(meta.get("column_renames", [])):
             if new in keys:
                 keys.add(old)
         return keys
@@ -3151,29 +3116,10 @@ class LakehouseTable:
         column does not exist in the data) — callers filter the raw
         column themselves; correctness never depends on the pruning.
         Returns (df, files_scanned, files_total)."""
-        all_files: list[str] = []
-        kept: list[tuple[Commit, str]] = []
-        for c, f in self._live_files():
-            all_files.append(f)
-            st = (c.stats or {}).get(f, {}).get(item)
-            # a None bound means no usable stats (e.g. a NULL partition
-            # value) — keep the file, skipping must be safe
-            if (
-                st is None
-                or st[0] is None
-                or st[1] is None
-                or not (hi < st[0] or lo > st[1])
-            ):
-                kept.append((c, f))
-        if not kept:
-            return self.snapshot().limit(0), 0, len(all_files)
-        df = self._apply_dvs(
-            self._read_data(
-                *[str(self.path / f) for _c, f in kept],
-                unified=lambda: self._unified_schema_for(kept),
-            )
+        snap = self.pin()
+        return self._pruned(
+            snap, lambda c, f: self._overlaps(snap.file_stats(c, f).get(item), lo, hi)
         )
-        return self._apply_renames(df), len(kept), len(all_files)
 
     def append_partitioned(
         self, df: DataFrame, operation: str = "append-partitioned"
@@ -3309,7 +3255,7 @@ class LakehouseTable:
                 errors.append(
                     f"v{v}: recorded row_count {c.row_count} != footer sum {rows}"
                 )
-        for dvf in self._live_dv_files():
+        for dvf in (f for c in self._live_commits() for f in c.dv_files or []):
             p = self.path / dvf
             if not p.exists():
                 errors.append(f"missing DV file {dvf}")
@@ -3380,12 +3326,9 @@ class LakehouseTable:
                 for _c, f in self._live_files()
             ]
             self._fold_schemas(
-                self._footer_schema_sources(
-                    [f for f in live if Path(f).exists()], opaque_ok=True
-                ),
+                self._footer_schema_sources([f for f in live if Path(f).exists()]),
                 dropped,
                 meta.get("widenings") or {},
-                opaque_ok=True,
             )
         except ValueError as e:
             errors.append(f"schema poisoning: {e}")
@@ -3667,13 +3610,13 @@ class LakehouseTable:
                 "cursor) or re-create the consumer from a snapshot"
             )
 
-    def _check_horizon(self, version: int | None) -> None:
-        horizon = self._read_meta().get("vacuum_horizon", 0)
+    def _check_horizon(self, version: int | None, meta: dict) -> None:
+        horizon = meta.get("vacuum_horizon", 0)
         if version is not None and version < horizon:
             # tag-pinned and branch-fork versions keep their files
             # through vacuum (see vacuum docstring) — still readable
-            pinned = set(self.tags().values()) | {
-                b["fork_version"] for b in self.branches().values()
+            pinned = set(meta.get("tags", {}).values()) | {
+                b["fork_version"] for b in meta.get("branches", {}).values()
             }
             if version in pinned:
                 return
@@ -3742,6 +3685,17 @@ class LakehouseTable:
             }
         return out
 
+    def _blooms_for(self, commit_dir: Path, files: list[str], cols: list[str]) -> dict:
+        """{file: {``__bloom__:col``: descriptor}} for freshly written
+        ``files`` and logical ``cols`` — the stats a commit records
+        so :meth:`scan_point` can skip them."""
+        phys = self._physical_of_logical()  # after minting: re-adds resolve fresh
+        out: dict = {}
+        for bc in cols:
+            for f, bl in self._bloom_stats(commit_dir, files, phys.get(bc, bc)).items():
+                out.setdefault(f, {})[f"__bloom__:{bc}"] = bl
+        return out
+
     def scan_point(self, col: str, value) -> tuple[DataFrame, int, int]:
         """Point lookup with bloom-filter file skipping: files whose
         bloom for ``col`` proves the key absent are never scanned
@@ -3753,46 +3707,27 @@ class LakehouseTable:
         (needle-in-100TB id probes)."""
         import base64
 
-        all_files: list[str] = []
-        kept: list[tuple[Commit, str]] = []
+        snap = self.pin()
         # rename-chain vintages: a file written before rename_column
         # carries its bloom under the OLD physical name — probe every
         # vintage key, exactly like scan_pruned's zone-map lookup.
-        keys = [f"__bloom__:{k}" for k in self._stat_keys(col)]
-        # checkpointed commits keep blooms in the side-car; tail
-        # commits carry them inline (inline wins on collision)
-        side = self._ckpt_blooms()
-        # _live_files (not raw commit.files): compaction / clustering
-        # rewrites record removed_files; scanning both the superseded
-        # file and its rewrite would return duplicate rows.
-        for c, f in self._live_files():
-            all_files.append(f)
-            fstats = {**side.get(f, {}), **(c.stats or {}).get(f, {})}
+        keys = [f"__bloom__:{k}" for k in self._stat_keys(col, snap.meta)]
+
+        def keep(c, f):
+            # checkpointed commits keep blooms in the side-car; tail
+            # commits carry them inline (inline wins on collision)
+            fstats = snap.file_stats(c, f, blooms=True)
             bl = next((fstats[k] for k in keys if k in fstats), None)
             if bl is None:
-                kept.append((c, f))
-                continue
+                return True
             bits = base64.b64decode(bl["b64"])
-            hit = all(
+            return all(
                 bits[p // 8] & (1 << (p % 8))
                 for p in self._bloom_positions_py(value, bl["m"], bl["k"])
             )
-            if hit:
-                kept.append((c, f))
-        if not kept:
-            return self.snapshot().limit(0), 0, len(all_files)
-        # mergeSchema + renames: pre-rename files carry the old
-        # physical column name; the residual equality predicate must
-        # see the coalesced logical column (same as scan_pruned).
-        df = self._apply_renames(
-            self._apply_dvs(
-                self._read_data(
-                    *[str(self.path / f) for _c, f in kept],
-                    unified=lambda: self._unified_schema_for(kept),
-                )
-            )
-        ).where(F_col(col) == value)
-        return df, len(kept), len(all_files)
+
+        df, n, total = self._pruned(snap, keep)
+        return df.where(F_col(col) == value), n, total
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
@@ -4455,12 +4390,12 @@ def optimize_advisor(table: "LakehouseTable") -> dict:
     - ``vacuum``: many superseded commits hold dead files.
     - ``healthy``: none of the above.
     """
-    commits = table.history()
-    live = table._live_commits(None)
-    n_files = sum(len(c.files) for c in live)
-    live_rows = sum(c.row_count for c in live)
-    dv_rows = sum(c.dv_row_count for c in commits)
-    dead_commits = len(commits) - len(live)
+    snap = table.pin()
+    n_files = len(snap.files)
+    live_rows = snap.rows + snap.dv_rows  # rows in the live files
+    dv_rows = snap.dv_rows
+    # versions are contiguous from 0: every one not in the live chain is dead
+    dead_commits = snap.version + 1 - len(snap.commits)
     avg_rows_per_file = live_rows / n_files if n_files else 0.0
     dv_fraction = dv_rows / live_rows if live_rows else 0.0
     if n_files > 0 and (avg_rows_per_file < 5000 and n_files >= 8):

@@ -392,9 +392,9 @@ def lakehouse_partial_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = sorted(
         ((c.row_count, f) for c in t.history() for f in c.files)
     )[:4]
-    n_before = len(t._files_for())
+    n_before = len(t.pin().files)
     t.compact_files([f for _n, f in sized])
-    assert len(t._files_for()) == n_before - 3, "4 files must become 1"
+    assert len(t.pin().files) == n_before - 3, "4 files must become 1"
     return (
         t.snapshot()
         .groupBy("o_orderstatus")

@@ -130,11 +130,12 @@ def streaming_sink_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFr
     the lakehouse sink, then the final micro-batch's aggregate is
     MERGEd a second time (the crash-replay); the hash gate proves the
     table still equals the once-applied batch aggregate."""
+    import shutil
+
     from lakehouse_test_spark.streaming.jobs import (
-        _drain_to_lakehouse,
+        _drain_into_table,
         events_stream,
     )
-    from lakehouse_test_spark.plans.lakehouse import LakehouseTable
 
     s = events_stream(spark, sf_dir)
     agg = (
@@ -151,15 +152,12 @@ def streaming_sink_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFr
             "total_value",
         )
     )
-    snap = _drain_to_lakehouse(agg, key_cols=["day", "event_type"])
-    # recover the sink table from the snapshot's file lineage and
+    table = _drain_into_table(agg, key_cols=["day", "event_type"])
     # replay the drained aggregate — the at-least-once retry
-    files = snap.inputFiles()
-    assert files, "sink table must have committed files"
-    table_path = files[0].split("/data/")[0].replace("file:", "")
-    table = LakehouseTable(spark, table_path)
-    table.merge(snap.coalesce(1), key_cols=["day", "event_type"])  # replay
-    return table.snapshot().localCheckpoint()
+    table.merge(table.snapshot().coalesce(1), key_cols=["day", "event_type"])
+    out = table.snapshot().localCheckpoint(eager=True)
+    shutil.rmtree(table.path, ignore_errors=True)
+    return out
 
 
 @query(

@@ -500,15 +500,15 @@ def lakehouse_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         stats_cols=["c_custkey", "c_nationkey"],
     )
     t.hilbert_cluster(["c_custkey", "c_nationkey"], target_partitions=4)
-    base_files = {f for _c, f in t._live_files()}
+    base_files = {f for _c, f in t.pin().files}
     for parity in (1, 2):
         t.append(
             c.where(F.col("c_custkey") % 3 == parity).repartition(2),
             stats_cols=["c_custkey", "c_nationkey"],
         )
-    new_raw = {f for _c, f in t._live_files()} - base_files
+    new_raw = {f for _c, f in t.pin().files} - base_files
     commit = t.hilbert_cluster_incremental()
-    live = {f for _c, f in t._live_files()}
+    live = {f for _c, f in t.pin().files}
     if commit is None or set(commit.removed_files) != new_raw:
         raise AssertionError("incremental cluster did not rewrite exactly the new files")
     if not base_files <= live or (new_raw & live):

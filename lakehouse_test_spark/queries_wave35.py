@@ -208,11 +208,11 @@ def lakehouse_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(c.where(F.col("c_custkey") % 12 == b))
     ck = t._read_checkpoint()
     assert ck is not None and ck["version"] >= 10, "auto-checkpoint missing"
-    fast = [(cm.version, tuple(cm.files)) for cm in t._live_commits()]
+    fast = [(cm.version, tuple(cm.files)) for cm in t.pin().commits]
     ptr = t.log_dir / "_last_checkpoint"
     bak = ptr.read_text()
     ptr.unlink()
-    slow = [(cm.version, tuple(cm.files)) for cm in t._live_commits()]
+    slow = [(cm.version, tuple(cm.files)) for cm in t.pin().commits]
     ptr.write_text(bak)
     assert fast == slow, "checkpointed plan diverged from full parse"
     snap = t.snapshot()

@@ -131,7 +131,7 @@ def lakehouse_widen_compact_native(spark: SparkSession, sf_dir: str) -> DataFram
     )
     t.compact(target_partitions=2)
     vintages = {
-        str(pq.read_schema(f).field("v").type) for f in t._files_for()
+        str(pq.read_schema(t.path / f).field("v").type) for _c, f in t.pin().files
     }
     return (
         t.snapshot()

@@ -835,14 +835,13 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
 
         if upto < 0:
             return [_FilePartition("insert", "", upto)]
-        t = LakehouseTable(None, str(self.path))
-        pairs = t._live_files(upto)
+        snap = LakehouseTable(None, str(self.path)).pin(upto)
         # base-file match key → [(dv path, [exact recorded refs])] —
         # distinct refs accumulated batch-by-batch (iter_batches), so
         # the driver never materializes the DV's full O(deleted rows)
         # column, only its distinct base-file strings
         by_base: dict[str, list[tuple[str, list[str]]]] = {}
-        for dvf in t._live_dv_files(upto):
+        for dvf in snap.dv_files:
             dvp = os.path.abspath(str(self.path / dvf))
             self._require_files(upto, [dvp])
             distinct: set[str] = set()
@@ -858,7 +857,7 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         from lakehouse_test_spark.plans.lakehouse import ts_micros
 
         parts: list[InputPartition] = []
-        for c, f in pairs:
+        for c, f in snap.files:
             fp = os.path.abspath(str(self.path / f))
             hits = by_base.get(_match_key(fp))
             parts.append(

@@ -83,9 +83,10 @@ def _table(path: str):
     return LakehouseTable(None, path)
 
 
-def _resolve(options: dict) -> tuple["object", int | None, str | None]:
-    """(table, version, branch) for the requested ref. Exactly one of
-    versionAsOf / timestampAsOf / tag / branch may be set."""
+def _pin(options: dict):
+    """(table, its :class:`Snapshot` at the requested ref) — at most
+    one of versionAsOf / timestampAsOf / tag / branch may be set;
+    ``LakehouseTable.pin`` does the lookup and the horizon check."""
     raw = options.get("path")
     if not raw:
         raise ValueError("lakehouse datasource requires option 'path'")
@@ -99,43 +100,29 @@ def _resolve(options: dict) -> tuple["object", int | None, str | None]:
     if len(opts) > 1:
         raise ValueError(f"pass at most one of versionAsOf/timestampAsOf/tag/branch, got {sorted(opts)}")
     t = _table(path)
-    if "branch" in opts:
-        return t, None, opts["branch"]
-    version: int | None = None
     if "versionAsOf" in opts:
-        version = int(opts["versionAsOf"])
-    elif "timestampAsOf" in opts:
-        version = t.version_at_timestamp(float(opts["timestampAsOf"]))
-    elif "tag" in opts:
-        known = t.tags()
-        if opts["tag"] not in known:
-            raise ValueError(f"unknown tag {opts['tag']!r}; have {sorted(known)}")
-        version = known[opts["tag"]]
-    t._check_horizon(version)
-    return t, version, None
-
-
-def _live_plan(t, version: int | None, branch: str | None):
-    """Driver-side snapshot plan: (commit, relative-or-absolute file)
-    pairs + live DV files, honoring refs. Mirrors snapshot() /
-    snapshot_branch() file resolution exactly."""
-    if branch is not None:
-        brs = t.branches()
-        if branch not in brs:
-            raise ValueError(f"unknown branch {branch!r}")
-        fork = brs[branch]["fork_version"]
-        pairs = list(t._live_files(fork))
-        pairs += [(c, f) for c in t._branch_commits(branch) for f in c.files]
-        dvs = t._live_dv_files(fork)
-    else:
-        pairs = list(t._live_files(version))
-        dvs = t._live_dv_files(version)
-    return pairs, dvs
+        return t, t.pin(int(opts["versionAsOf"]))
+    if "timestampAsOf" in opts:
+        return t, t.pin(timestamp=float(opts["timestampAsOf"]))
+    return t, t.pin(tag=opts.get("tag"), branch=opts.get("branch"))
 
 
 def _abs_file(root: Path, f: str) -> str:
     # clone/convert commits reference absolute paths already
     return f if f.startswith("/") or f.startswith("file:") else str(root / f)
+
+
+def _split_top(s: str) -> list[str]:
+    """Split a DDL type list on its top-level commas."""
+    out, depth, cur = [], 0, ""
+    for ch in s:
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            out.append(cur)
+            cur = ""
+        else:
+            cur += ch
+    return out + [cur]
 
 
 _PA_TO_DDL = {
@@ -170,7 +157,7 @@ def _ddl_of(pa_type) -> str:
 
 
 def _arrow_of_ddl(ddl: str):
-    """Spark DDL → Arrow type (the widening-target subset)."""
+    """Spark DDL (as commits record it) → Arrow type."""
     import pyarrow as pa
 
     simple = {
@@ -185,56 +172,53 @@ def _arrow_of_ddl(ddl: str):
         "binary": pa.binary(),
         "date": pa.date32(),
         "timestamp": pa.timestamp("us", tz="UTC"),
+        "timestamp_ntz": pa.timestamp("us"),
     }
-    ddl = ddl.strip().lower()
-    if ddl in simple:
-        return simple[ddl]
+    ddl = ddl.strip()
+    if ddl.lower() in simple:
+        return simple[ddl.lower()]
     m = re.match(r"decimal\((\d+),\s*(\d+)\)", ddl)
     if m:
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
     if ddl.startswith("array<") and ddl.endswith(">"):
         return pa.list_(_arrow_of_ddl(ddl[6:-1]))
-    raise ValueError(f"unsupported widening target {ddl}")
+    if ddl.startswith("map<") and ddl.endswith(">"):
+        k, v = _split_top(ddl[4:-1])
+        return pa.map_(_arrow_of_ddl(k), _arrow_of_ddl(v))
+    if ddl.startswith("struct<") and ddl.endswith(">"):
+        return pa.struct(
+            [
+                pa.field(n, _arrow_of_ddl(t))
+                for n, t in (x.split(":", 1) for x in _split_top(ddl[7:-1]))
+            ]
+        )
+    raise ValueError(f"unsupported lakehouse column type {ddl}")
 
 
 class _SnapshotState:
-    """Everything the reader needs, resolved once driver-side and
-    pickled to executors: file list with per-file stats, DV positions
-    by file, physical→logical rename map, unified logical Arrow
-    schema."""
+    """Everything the reader needs, resolved once driver-side from
+    the table's pinned :class:`Snapshot` and pickled to executors:
+    file list with per-file stats, DV positions by file,
+    physical→logical rename map, and the snapshot's schema as a
+    logical Arrow schema."""
 
     def __init__(self, options: dict):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        t, version, branch = _resolve(options)
+        t, snap = _pin(options)
         self.root = Path(t.path)
-        pairs, dv_files = _live_plan(t, version, branch)
-        self._empty_schema = None
-        if not pairs:
-            # a truncating overwrite leaves zero live files but a
-            # commit-recorded schema: the table is EMPTY, not absent
-            self._empty_schema = None if branch else t._recorded_schema(version)
-            if self._empty_schema is None:
-                raise ValueError(f"no data at requested ref of {self.root}")
-        self.files: list[str] = []
-        self.stats: list[dict] = []
-        side = t._ckpt_blooms()  # checkpoint side-car bloom descriptors
-        for c, f in pairs:
-            self.files.append(_abs_file(self.root, f))
-            self.stats.append({**side.get(f, {}), **(c.stats or {}).get(f, {})})
-        tmeta = t._read_meta()
-        # DROP COLUMN + type widening metadata (column-mapping
-        # schema evolution): dropped physicals are invisible;
-        # widened columns read at their declared target type
+        if not snap.files and not snap.schema:
+            raise ValueError(f"no data at requested ref of {self.root}")
+        self.files = [_abs_file(self.root, f) for _c, f in snap.files]
+        self.stats = [snap.file_stats(c, f, blooms=True) for c, f in snap.files]
+        # dropped physicals stay invisible (column-mapping DROP)
         self._dropped = {
-            d["physical"] for d in tmeta.get("dropped_columns", [])
+            d["physical"] for d in snap.meta.get("dropped_columns", [])
         }
-        self._widenings = tmeta.get("widenings") or {}
         # physical → logical rename chain (column mapping)
-        renames = tmeta.get("column_renames", [])
         log_of_phys: dict[str, str] = {}
-        for old, new in renames:
+        for old, new in snap.meta.get("column_renames", []):
             # walk: anything currently mapping TO old now maps to new
             for k, v in list(log_of_phys.items()):
                 if v == old:
@@ -242,59 +226,21 @@ class _SnapshotState:
             log_of_phys.setdefault(old, new)
         self.logical_of_physical = log_of_phys
         self.stat_keys = {  # logical col -> every vintage stats key
-            c: sorted(t._stat_keys(c))
+            c: sorted(t._stat_keys(c, snap.meta))
             for c in {*log_of_phys.values()}
         }
-        # unified logical schema across vintages (additive evolution;
-        # type conflicts resolve to the WIDER side, then declared
-        # widening targets override)
-        from lakehouse_test_spark.plans.lakehouse import LakehouseTable as _LT
-
-        fields: dict[str, pa.DataType] = {}
-        if self._empty_schema is not None:
-            for n, ddl in self._empty_schema.items():
-                if n not in self._dropped:
-                    fields[log_of_phys.get(n, n)] = _arrow_of_ddl(ddl)
-        for f in self.files:
-            sch = pq.read_schema(f)
-            for fld in sch:
-                if fld.name in self._dropped:
-                    continue
-                logical = log_of_phys.get(fld.name, fld.name)
-                prev = fields.get(logical)
-                if prev is None or (
-                    pa.types.is_null(prev) and not pa.types.is_null(fld.type)
-                ):
-                    fields[logical] = fld.type
-                elif prev != fld.type:
-                    try:
-                        p_ddl, f_ddl = _LT._pa_ddl(prev), _LT._pa_ddl(fld.type)
-                    except ValueError:
-                        continue  # nested type: keep first-seen, cast at read
-                    target = self._widenings.get(fld.name)
-                    if target and _LT._widens_to(p_ddl, target) and _LT._widens_to(f_ddl, target):
-                        fields[logical] = _arrow_of_ddl(target)
-                    elif _LT._widens_to(p_ddl, f_ddl):
-                        fields[logical] = fld.type
-                    elif _LT._widens_to(f_ddl, p_ddl):
-                        pass
-                    else:
-                        # mirror the native _read_data: silently keeping
-                        # the first-seen type would make the datasource
-                        # and native snapshot DIVERGE on the same table
-                        raise ValueError(
-                            f"irreconcilable vintages for {logical}: "
-                            f"{p_ddl} vs {f_ddl} (in {f}) — run verify()"
-                        )
-        phys_of_log = {v: k for k, v in log_of_phys.items()}
-        for logical in list(fields):
-            target = self._widenings.get(phys_of_log.get(logical, logical))
-            if target:
-                fields[logical] = _arrow_of_ddl(target)
-        self.arrow_schema = pa.schema(list(fields.items()))
+        # the snapshot's unified schema (drops excluded, widening
+        # targets applied), under logical names
+        fields: dict[str, str] = {}
+        for n, ddl in snap.schema.items():
+            fields.setdefault(log_of_phys.get(n, n), ddl)
+        self._ddl = ", ".join(f"`{n}` {d}" for n, d in fields.items())
+        self.arrow_schema = pa.schema(
+            [(n, _arrow_of_ddl(d)) for n, d in fields.items()]
+        )
         # DV positions keyed by absolute file path
         self.dv_positions: dict[str, list[int]] = {}
-        for dvf in dv_files:
+        for dvf in snap.dv_files:
             tbl = pq.read_table(str(self.root / dvf))
             for fp, pos in zip(
                 tbl.column("_dv_file").to_pylist(),
@@ -306,7 +252,7 @@ class _SnapshotState:
                 self.dv_positions.setdefault(fp, []).append(pos)
 
     def ddl(self) -> str:
-        return ", ".join(f"`{f.name}` {_ddl_of(f.type)}" for f in self.arrow_schema)
+        return self._ddl
 
 
 def _bloom_hit(bl: dict, value) -> bool:
@@ -518,7 +464,7 @@ class _WriterState:
         self.commit_schema = None
         if schema is not None:
             self.commit_schema = {
-                self.phys_of_logical.get(f.name, f.name): f.dataType.simpleString().lower()
+                self.phys_of_logical.get(f.name, f.name): f.dataType.simpleString()
                 for f in schema.fields
             }
             if not overwrite:

@@ -117,6 +117,27 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
 def _drain_to_lakehouse(
     stream_df: DataFrame, key_cols: list[str], state_partitions: int = 1
 ) -> DataFrame:
+    """Drain ``stream_df`` into a gate table (:func:`_drain_into_table`)
+    and return its snapshot, detached from the table's files.
+
+    The gate table is a run-scoped throwaway. localCheckpoint(eager)
+    cuts the lineage and holds the (group-cardinality-bounded)
+    aggregate as MEMORY_AND_DISK blocks; then the gate dir is swept
+    NOW instead of at process exit: a long session running hundreds
+    of drains was pinning hundreds of committed parquet snapshots in
+    /dev/shm until exit (r12; the atexit sweep stays as the
+    exception-path backstop)."""
+    import shutil
+
+    table = _drain_into_table(stream_df, key_cols, state_partitions)
+    out = table.snapshot().localCheckpoint(eager=True)
+    shutil.rmtree(table.path, ignore_errors=True)
+    return out
+
+
+def _drain_into_table(
+    stream_df: DataFrame, key_cols: list[str], state_partitions: int = 1
+):
     """PRODUCTION-sink drain: foreachBatch upserts each micro-batch
     into a committed :class:`LakehouseTable` (append, then MERGE keyed
     on ``key_cols`` — Delta's MERGE-per-microbatch pattern) and the
@@ -137,7 +158,10 @@ def _drain_to_lakehouse(
     state partition holds that at any SF, since the aggregate's
     cardinality is bounded by days×types, not by input rows. Real
     deployments tune exactly this knob; state volume, not
-    parallelism, drives it."""
+    parallelism, drives it.
+
+    Returns the gate :class:`LakehouseTable`; the caller reads it and
+    sweeps its directory."""
     import os
     import tempfile
 
@@ -150,9 +174,7 @@ def _drain_to_lakehouse(
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     gate_dir = tempfile.mkdtemp(prefix="lh_stream_gate_", dir=base)
     # run-scoped: swept by the same atexit hook as the checkpoints
-    # (a long session runs hundreds of gate drains; the snapshot must
-    # stay readable until process exit because the returned frame is
-    # consumed lazily by the caller)
+    # (the backstop when a caller fails before its own sweep)
     _register_cleanup(gate_dir)
     table = LakehouseTable(spark, gate_dir)
 
@@ -228,17 +250,7 @@ def _drain_to_lakehouse(
         # bounded gate run: the checkpoint has no replay value and
         # would otherwise leak into /dev/shm on every invocation
         shutil.rmtree(ck, ignore_errors=True)
-    # The gate table is a run-scoped throwaway. Detach the returned
-    # frame from its files — localCheckpoint(eager) cuts the lineage
-    # and holds the (group-cardinality-bounded) aggregate as
-    # MEMORY_AND_DISK blocks — then sweep the gate dir NOW instead of
-    # at process exit: a long session running hundreds of drains was
-    # pinning hundreds of committed parquet snapshots in /dev/shm
-    # until exit (r12; the atexit sweep stays as the exception-path
-    # backstop).
-    out = table.snapshot().localCheckpoint(eager=True)
-    shutil.rmtree(gate_dir, ignore_errors=True)
-    return out
+    return table
 
 
 @query(

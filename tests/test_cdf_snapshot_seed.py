@@ -152,7 +152,7 @@ def test_snapshot_seed_plans_one_partition_per_file(spark, tmp_path):
     t.append(spark.range(100, 120).select(F.col("id").alias("k")).repartition(3))  # 3 files
     t.delete_where_dv("k % 10 = 1")  # DV commit: no new base files
     r = LakehouseCDFStreamReader({"path": str(t.path)})
-    live = t._live_files(t.latest_version())
+    live = t.pin(t.latest_version()).files
     parts = list(r._snapshot_partitions(t.latest_version()))
     assert len(parts) == len(live) == 10
 

@@ -137,7 +137,7 @@ def test_compact_files_keeps_zone_maps_and_schema(spark, tmp_path):
     t = LakehouseTable(spark, str(tmp_path / "t"))
     for lo in (0, 10, 20):
         t.append(_kv(spark, lo, lo + 10), stats_cols=["k"])
-    bin_files = [f for _c, f in t._live_files()]
+    bin_files = [f for _c, f in t.pin().files]
     t.append(_kv(spark, 100, 110), stats_cols=["k"])
     c = t.compact_files(bin_files)
     logged = t.history()[-1]

@@ -618,13 +618,13 @@ def test_compaction_materializes_widening_spec_native(spark, tmp_path):
     )
     # pre-compaction: two footer vintages live (int32 + decimal)
     vintages = {
-        str(pq.read_schema(f).field("v").type) for f in t._files_for()
+        str(pq.read_schema(t.path / f).field("v").type) for _c, f in t.pin().files
     }
     assert len(vintages) == 2
     c = t.compact(target_partitions=2)
     # post-compaction: ONE footer schema, the widened physical type
     vintages = {
-        str(pq.read_schema(f).field("v").type) for f in t._files_for()
+        str(pq.read_schema(t.path / f).field("v").type) for _c, f in t.pin().files
     }
     assert vintages == {"decimal128(12, 2)"}
     # export: the head snapshot's manifests reference only

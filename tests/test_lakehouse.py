@@ -51,10 +51,10 @@ def test_committed_is_readable_invariant(spark, table):
 def test_compact_preserves_rows(spark, table):
     for _ in range(4):
         table.append(person_stream(spark, 25).repartition(4))
-    files_before = len(table._files_for())
+    files_before = len([str(table.path / f) for _c, f in table.pin().files])
     table.compact(target_partitions=1)
     assert table.snapshot().count() == 100
-    assert len(table._files_for()) < files_before
+    assert len([str(table.path / f) for _c, f in table.pin().files]) < files_before
     # time travel across the compaction boundary still works
     assert table.snapshot(version=1).count() == 50
 
@@ -194,7 +194,7 @@ def test_delta_export_replay_matches_native(spark, table):
     for v in range(table.latest_version() + 1):
         native = sorted(
             str(p.relative_to(table.path))
-            for p in map(__import__("pathlib").Path, table._files_for(v))
+            for p in map(__import__("pathlib").Path, [table.path / f for _c, f in table.pin(v).files])
         )
         assert replay_live_files(str(table.path), v) == native, f"v{v} file set"
         assert (
@@ -464,7 +464,7 @@ def test_deletion_vectors_stack_and_appends(spark, table):
     assert table.snapshot().count() == 150 - n_lt40
 
     table.compact()
-    assert table._live_dv_files() == []  # restate cleared the vectors
+    assert list(table.pin().dv_files) == []  # restate cleared the vectors
     assert table.snapshot().count() == 150 - n_lt40
     assert table.snapshot().where("age < 40").count() == table.snapshot().where(
         "age >= 40 and age < 40"
@@ -997,7 +997,7 @@ def test_compact_files_rebases_over_concurrent_append(spark, table):
     c = table.compact_files(c0.files)
     assert c.version == 3  # rebased past the concurrent append
     assert table.snapshot().count() == 90  # nothing lost
-    live = {f for _c, f in table._live_files()}
+    live = {f for _c, f in table.pin().files}
     assert not (set(c0.files) & live)  # bin replaced
     assert set(c.files) <= live
 
@@ -1017,7 +1017,7 @@ def test_compact_files_rebases_over_disjoint_bin(spark, table):
     c = table.compact_files(c0.files)
     assert c.version == 3
     assert table.snapshot().count() == 60
-    live = {f for _c, f in table._live_files()}
+    live = {f for _c, f in table.pin().files}
     assert not ((set(c0.files) | set(c1.files)) & live)
 
 

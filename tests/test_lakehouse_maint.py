@@ -543,14 +543,14 @@ def test_partial_compaction_remove_file_semantics(spark, table):
             spark.range(lo, lo + 20).select(F.col("id").alias("k")),
         )
     before = table.snapshot().orderBy("k").collect()
-    live_before = {f for _c, f in table._live_files()}
+    live_before = {f for _c, f in table.pin().files}
     # compact the first two commits' files into one replacement
     subset = sorted(f for c in table.history()[:2] for f in c.files)
     c = table.compact_files(subset)
     assert c.removed_files == subset and not c.data_change and not c.restate
     # logical rows unchanged, replaced files no longer live
     assert table.snapshot().orderBy("k").collect() == before
-    live_after = {f for _c, f in table._live_files()}
+    live_after = {f for _c, f in table.pin().files}
     assert not (live_after & set(subset))
     assert len(live_after) == len(live_before) - len(subset) + len(c.files)
     # time travel below the compaction still reads the original files
@@ -572,7 +572,7 @@ def test_partial_compaction_guards(spark, table):
     with pytest.raises(ValueError, match="not live"):
         table.compact_files(["data/nope/part-x.parquet"])
     table.delete_where_dv("k = 3")
-    live = [f for _c, f in table._live_files()]
+    live = [f for _c, f in table.pin().files]
     with pytest.raises(ValueError, match="deletion vectors"):
         table.compact_files(live[:1])
 
@@ -602,7 +602,7 @@ def test_exports_emit_partial_rewrite(spark, table):
     export_delta_log(spark, table)
     for v in range(table.latest_version() + 1):
         native = sorted(
-            str(p.relative_to(table.path)) for p in map(Path, table._files_for(v))
+            str(p.relative_to(table.path)) for p in map(Path, [table.path / f for _c, f in table.pin(v).files])
         )
         assert replay_live_files(str(table.path), v) == native, f"delta v{v}"
 
@@ -862,7 +862,7 @@ def test_drop_column_is_logical_and_readd_gets_fresh_identity(spark, table):
     # data files untouched (logical drop)
     import pyarrow.parquet as pq
 
-    f = table._files_for()[0]
+    f = [str(table.path / f) for _c, f in table.pin().files][0]
     assert "v" in pq.read_schema(f).names
     # re-add: fresh identity — old values must NOT resurrect
     table.append(
@@ -872,7 +872,7 @@ def test_drop_column_is_logical_and_readd_gets_fresh_identity(spark, table):
     assert all(v is None for k, v in rows if k < 50)
     assert all(v == 9 for k, v in rows if k >= 50)
     # physical identity is fresh in the new files
-    newest = table._files_for()[-1]
+    newest = [str(table.path / f) for _c, f in table.pin().files][-1]
     names = pq.read_schema(newest).names
     assert "v" not in names and any(n.startswith("v__r") for n in names)
 

@@ -25,9 +25,9 @@ def test_auto_checkpoint_cadence_and_equivalence(spark, tmp_path):
     ck = t._read_checkpoint()
     assert ck["version"] == 10
     # checkpointed and non-checkpointed planning agree exactly
-    fast = [(c.version, tuple(c.files)) for c in t._live_commits()]
+    fast = [(c.version, tuple(c.files)) for c in t.pin().commits]
     (t.log_dir / "_last_checkpoint").unlink()
-    slow = [(c.version, tuple(c.files)) for c in t._live_commits()]
+    slow = [(c.version, tuple(c.files)) for c in t.pin().commits]
     assert fast == slow
     assert t.snapshot().count() == 24
 
@@ -41,7 +41,7 @@ def test_checkpoint_then_restate_tail(spark, tmp_path):
     assert t._read_checkpoint() is not None
     t.delete_where("v = 1")  # restate in the tail
     assert t.snapshot().count() == 22
-    live = t._live_commits()
+    live = t.pin().commits
     assert live[0].restate and live[0].version == 11
 
 

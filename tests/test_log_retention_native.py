@@ -344,7 +344,7 @@ def test_partial_rewrite_conflict_classification_on_cleaned_log(spark, tmp_path)
     spurious LogRetentionError."""
     t = _mk(spark, tmp_path / "pp", n=12)
     t.clean_log(keep_versions=3)  # earliest = 9
-    bin_files = [f for _c, f in t._live_files() if "data/" in f][:1]
+    bin_files = [f for _c, f in t.pin().files if "data/" in f][:1]
     fired = {"n": 0}
 
     def race():
@@ -564,7 +564,7 @@ def test_partial_rewrite_with_reclaimed_base_raises(spark, tmp_path):
     from lakehouse_test_spark.plans.lakehouse import LogRetentionError
 
     t = _mk(spark, tmp_path / "stale", n=4)
-    bin_files = [f for _c, f in t._live_files()][:1]
+    bin_files = [f for _c, f in t.pin().files][:1]
     fired = {"n": 0}
 
     def stall_then_roll():

@@ -241,16 +241,16 @@ def test_hilbert_incremental_rewrites_only_new_files(spark):
     t = _t(spark)
     t.append(_xy(spark, 0, 4096).repartition(8, "id"), stats_cols=["x", "y"])
     t.hilbert_cluster(["x", "y"], target_partitions=8)
-    base_files = {f for _c, f in t._live_files()}
+    base_files = {f for _c, f in t.pin().files}
     # two fresh appends land unclustered
     t.append(_xy(spark, 4096, 5120).repartition(4, "id"), stats_cols=["x", "y"])
     t.append(_xy(spark, 5120, 6144).repartition(4, "id"), stats_cols=["x", "y"])
-    new_raw = {f for _c, f in t._live_files()} - base_files
+    new_raw = {f for _c, f in t.pin().files} - base_files
     c = t.hilbert_cluster_incremental()
     assert c is not None and c.operation == "hilbert_cluster_incr"
     assert c.data_change is False
     assert set(c.removed_files) == new_raw  # exactly the new files rewritten
-    live = {f for _c, f in t._live_files()}
+    live = {f for _c, f in t.pin().files}
     assert base_files <= live  # previously clustered files untouched
     assert not (new_raw & live)  # raw appends superseded
     assert t.snapshot().count() == 6144
@@ -372,14 +372,14 @@ def test_convert_then_incremental_cluster(spark, tmp_path):
     t = LakehouseTable(spark, str(tmp_path / "conv2"))
     t.convert_from_parquet(src, stats_cols=["x", "y"])
     t.hilbert_cluster(["x", "y"], target_partitions=4)
-    base = {f for _c, f in t._live_files()}
+    base = {f for _c, f in t.pin().files}
     t.append(
         spark.range(512, 640).selectExpr(
             "id AS k", "id % 16 AS x", "CAST(id / 16 AS BIGINT) AS y"
         ),
         stats_cols=["x", "y"],
     )
-    new_raw = {f for _c, f in t._live_files()} - base
+    new_raw = {f for _c, f in t.pin().files} - base
     c = t.hilbert_cluster_incremental()
     assert c is not None and set(c.removed_files) == new_raw
     assert t.snapshot().count() == 640
