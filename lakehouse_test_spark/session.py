@@ -15,8 +15,15 @@ Reference surface covered here (SURVEY.md §2a):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shlex
+import shutil
+import sys
+import tempfile
 
+import py4j
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,9 +50,10 @@ def _default_local_dir(master: str) -> str | None:
     the node's LOCAL disks), or None to keep Spark's default.
 
     SPARK_GRAFT_LOCAL_DIR always wins ("none" keeps Spark's default).
-    Without it, RAM-backed /dev/shm is used ONLY for local[...]
-    masters: a single-box sandbox run's shuffle volume is bounded by
-    the fixture size and tmpfs saves ~0.12 s per exchange at sf0.1.
+    Without it, RAM-backed /dev/shm is used ONLY for ``local`` and
+    ``local[...]`` masters, not ``local-cluster[...]`` pseudo-clusters:
+    a single-box sandbox run's shuffle volume is bounded by the
+    fixture size and tmpfs saves ~0.12 s per exchange at sf0.1.
     On a cluster master the default must stay Spark's: shuffle SPILL
     happens exactly under memory pressure, so defaulting spill into a
     RAM-backed tmpfs at 100 TB is an OOM/ENOSPC machine — production
@@ -55,9 +63,98 @@ def _default_local_dir(master: str) -> str | None:
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is not None:
         return local_dir
-    if master.startswith("local") and os.path.isdir("/dev/shm"):
+    single_box = master == "local" or master.startswith("local[")
+    if single_box and os.path.isdir("/dev/shm"):
         return "/dev/shm/spark-local"
     return None
+
+
+#: Spark puts its bundled ``pyspark.zip`` and py4j zip first on every
+#: Python worker's PYTHONPATH. Each worker call (DataSource lookup,
+#: create, filter pushdown, read planning, every task) begins with
+#: ``importlib.invalidate_caches()``, which makes every zipimporter
+#: re-read its archive's whole directory (about 0.17 s per call on a
+#: 4-vCPU host). Zip imports also compile pyspark from source at each
+#: worker launch. This interpreter wrapper drops the two zips, so
+#: workers import the installed, byte-compiled package instead.
+_WORKER_SH = """#!/bin/sh
+set -f
+IFS=:
+p=
+for e in $PYTHONPATH; do
+  case "$e" in
+    */pyspark.zip|*/py4j-*-src.zip) ;;
+    *) p="${p:+$p:}$e" ;;
+  esac
+done
+export PYTHONPATH="$p"
+exec %s "$@"
+"""
+
+#: the wrapper this process wrote (at most one per process)
+_worker_wrapper: str | None = None
+#: the ``PYSPARK_PYTHON`` value the wrapper replaced (None: unset)
+_unwrapped_python: str | None = None
+
+
+def _worker_python_to_wrap(master: str, pyspark_python: str | None) -> str | None:
+    """The interpreter Python workers should run without Spark's zips,
+    or None to leave ``PYSPARK_PYTHON`` as it is.
+
+    Only masters whose workers all run on the driver's host qualify
+    (``local``, ``local[...]``, ``local-cluster[...]``): executors on
+    other hosts run the ``PYSPARK_PYTHON`` path on their own file
+    system, where the wrapper does not exist. Only the driver's own
+    interpreter qualifies, and only when the driver imported pyspark
+    and py4j from directories: then workers without the zips import
+    the very files the driver runs. That holds when ``PYSPARK_PYTHON``
+    is unset or names (on PATH, symlinks resolved) the driver's
+    interpreter; any other interpreter is left alone, since nothing is
+    known of what it has installed. Starts no process.
+    """
+    if not (master == "local" or master.startswith(("local[", "local-cluster["))):
+        return None
+    if not all(os.path.isdir(os.path.dirname(m.__file__)) for m in (pyspark, py4j)):
+        return None
+    if pyspark_python:
+        found = shutil.which(pyspark_python)
+        if found is None or os.path.realpath(found) != os.path.realpath(sys.executable):
+            return None
+    return sys.executable
+
+
+def _use_zipless_workers(master: str) -> None:
+    """Point ``PYSPARK_PYTHON`` at the zip-dropping wrapper when
+    ``_worker_python_to_wrap`` allows it for ``master``. A later
+    session whose master does not allow it (say a cluster session
+    after a local one) gets back the value the wrapper replaced.
+    Repeated calls for the same kind of master change nothing."""
+    global _worker_wrapper, _unwrapped_python
+    current = os.environ.get("PYSPARK_PYTHON")
+    wrapped = _worker_wrapper is not None and current == _worker_wrapper
+    if wrapped:
+        current = _unwrapped_python
+    exe = _worker_python_to_wrap(master, current)
+    if exe is None:
+        if wrapped and current is None:
+            del os.environ["PYSPARK_PYTHON"]
+        elif wrapped:
+            os.environ["PYSPARK_PYTHON"] = current
+        return
+    if wrapped:
+        return
+    if _worker_wrapper is None:
+        tmp = tempfile.mkdtemp(prefix="pyworker-")
+        atexit.register(shutil.rmtree, tmp, True)
+        path = os.path.join(tmp, "python")
+        with open(path, "w") as f:
+            f.write(_WORKER_SH % shlex.quote(exe))
+        os.chmod(path, 0o755)
+        _worker_wrapper = path
+    # a temp dir mounted noexec could not run it
+    if os.access(_worker_wrapper, os.X_OK):
+        _unwrapped_python = current
+        os.environ["PYSPARK_PYTHON"] = _worker_wrapper
 
 
 def get_spark(
@@ -72,10 +169,15 @@ def get_spark(
     skew-split), partition coalescing keeps small shuffles from
     producing thousands of empty tasks, and the 64 MB advisory size
     targets healthy reduce-partition sizes at any SF.
+
+    Python workers (UDFs, Python DataSources and streaming sources)
+    import pyspark byte-compiled when they run on the driver's host
+    with the driver's own interpreter (see ``_use_zipless_workers``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
+    _use_zipless_workers(master)
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus else 32
 

@@ -19,7 +19,7 @@ def test_local_dir_defaults_to_tmpfs_only_for_local_master(monkeypatch):
         got = S._default_local_dir(m)
         assert got == ("/dev/shm/spark-local" if has_shm else None)
     # cluster masters never default into tmpfs
-    for m in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+    for m in ("spark://host:7077", "yarn", "k8s://https://host:443", "local-cluster[2,1,1024]"):
         assert S._default_local_dir(m) is None
 
 
