@@ -29,6 +29,7 @@ import json
 import re as _re
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Callable
@@ -168,6 +169,11 @@ _DV_DDL = "_dv_file STRING, _dv_pos BIGINT"
 #: marks a footer type the fold compares by exact string only (nested
 #: vintages never conflict); stripped once the fold is done
 _OPAQUE = "__opaque__:"
+
+#: above this many paths Spark lists files with a distributed job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+#: held while ``_read_data`` has the threshold raised
+_LISTING_LOCK = threading.Lock()
 
 
 def _ddl(schema: dict) -> str:
@@ -1002,20 +1008,13 @@ class LakehouseTable:
             # "multiple source rows matched") — without this check the
             # union path would silently insert duplicate keyed rows.
             # Duplicate keys that match nothing insert all their rows,
-            # same as Delta's WHEN NOT MATCHED INSERT.
-            dup_matched = (
-                updates.groupBy(*key_cols)
-                .count()
-                .where(F_col("count") > 1)
-                .join(
-                    current.select(*key_cols).distinct(),
-                    on=key_cols,
-                    how="left_semi",
-                )
-                .limit(1)
-                .count()
-            )
-            if dup_matched:
+            # same as Delta's WHEN NOT MATCHED INSERT. The source alone
+            # is checked first, so a source with unique keys (the
+            # common upsert) never scans the target for this guard.
+            dups = updates.groupBy(*key_cols).count().where(F_col("count") > 1)
+            if not dups.isEmpty() and not dups.join(
+                current.select(*key_cols).distinct(), on=key_cols, how="left_semi"
+            ).isEmpty():
                 raise ValueError(
                     "merge: multiple source rows match the same target key; "
                     "deduplicate the source (Delta MERGE raises here too)"
@@ -2942,10 +2941,25 @@ class LakehouseTable:
         lacks read NULL (additive evolution), dropped physicals are
         absent from the schema (projected away, data retained), and
         widened columns upcast at scan (Spark 4's parquet readers
-        read an INT32 page into a BIGINT column)."""
-        return self.spark.read.schema(_ddl(schema)).parquet(
-            *[str(self.path / f) for f in files]
-        )
+        read an INT32 page into a BIGINT column).
+
+        The log already lists the files, so Spark's distributed listing
+        job (above ``parallelPartitionDiscovery.threshold``, 32 paths)
+        is switched off for this call only. The lock keeps concurrent
+        reads from restoring each other's value."""
+        conf = self.spark.conf
+        with _LISTING_LOCK:
+            old = conf.get(_LISTING_THRESHOLD, None)
+            conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+            try:
+                return self.spark.read.schema(_ddl(schema)).parquet(
+                    *[str(self.path / f) for f in files]
+                )
+            finally:
+                if old is None:
+                    conf.unset(_LISTING_THRESHOLD)
+                else:
+                    conf.set(_LISTING_THRESHOLD, old)
 
     def _mint_readd_physicals(self, cols: list[str]) -> None:
         """Called on append (and driver-side by the DataSource write

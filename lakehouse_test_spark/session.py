@@ -21,11 +21,13 @@ import shlex
 import shutil
 import sys
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 import py4j
 import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 #: fixture tables written by the driver (TESTDATA.md); bare names are
 #: also the DuckDB oracle view names.
@@ -232,8 +234,67 @@ def get_spark(
     return spark
 
 
+def _footer_files(path: str) -> list[str] | None:
+    """The parquet files ``spark.read.parquet(path)`` reads: ``path``
+    itself, or the files of a flat directory whose names start with
+    neither ``_`` nor ``.`` (Spark's hidden files). None for anything
+    else (a partitioned or empty directory), whose facts only Spark's
+    own inference knows."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = [os.path.join(path, n) for n in sorted(os.listdir(path)) if n[0] not in "_."]
+    if not files or not all(os.path.isfile(f) for f in files):
+        return None
+    return files
+
+
+def _as_spark_reads(t):
+    """Arrow type ``t`` the way load_table's confs make Spark read it:
+    TIMESTAMP(NANOS) as int64 (``nanosAsLong``) and every nested field
+    nullable (Spark reads every file column as nullable)."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        return pa.int64()
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_as_spark_reads(f.type)).with_nullable(True) for f in t])
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return pa.list_(t.value_field.with_type(_as_spark_reads(t.value_type)).with_nullable(True))
+    if pa.types.is_map(t):
+        return pa.map_(
+            _as_spark_reads(t.key_type),
+            t.item_field.with_type(_as_spark_reads(t.item_type)).with_nullable(True),
+        )
+    return t
+
+
+def _footer_schema(files: list[str]) -> StructType | None:
+    """The schema Spark would infer for ``files`` under load_table's
+    confs, from the first file's parquet footer, so reading them starts
+    no inference job. INT96 reads as ``timestamp`` (coerced to µs here,
+    so only TIMESTAMP(NANOS) is left at ns), and naive timestamps read
+    as ``timestamp`` because ``inferTimestampNTZ`` is off. None for a
+    type pyspark does not map (unsigned ints, which Spark widens)."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    arrow = pq.ParquetFile(files[0], coerce_int96_timestamp_unit="us").schema_arrow
+    try:
+        return StructType([StructField(f.name, from_arrow_type(_as_spark_reads(f.type))) for f in arrow])
+    except PySparkTypeError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing ns-timestamps to Spark µs.
+
+    The read carries the schema of the table's parquet footer
+    (``_footer_schema``), so loading starts no Spark job; only a
+    partitioned directory or a column type pyspark cannot map falls
+    back to Spark's inference job.
 
     ``events.ts`` is TIMESTAMP(NANOS) in the driver parquet; with
     ``nanosAsLong`` it surfaces as a bigint of epoch-nanos which we
@@ -244,7 +305,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Defensive conf: the driver may hand us a session built without
     our factory — ``nanosAsLong`` is required to read events at all,
     and UTC keeps date bucketing aligned with the DuckDB oracle.
-    Both are runtime-settable SQL confs.
+    Both are runtime-settable SQL confs, and other reads in the
+    session rely on them too.
     """
     # cache hit first: the conf writes below are 5 JVM RPC roundtrips
     # per call, and query construction calls load_table once per
@@ -265,18 +327,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (often default-200) static shuffle partition count to data size
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":  # TIMESTAMP(NANOS) fixture vintage
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":  # defensive: inference raced the conf
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    path = f"{sf_dir}/{name}.parquet"
+    files = _footer_files(path)
+    schema = _footer_schema(files) if files else None
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    df = reader.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # TIMESTAMP(NANOS) fixture vintage
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 
 #: (abspath(sf_dir), table) -> persisted, core-aligned DataFrame
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
+def _materialise(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and fill its cache; unpersisted again if that fails."""
+    df = df.persist()
+    try:
+        df.count()
+    except BaseException:
+        df.unpersist()
+        raise
+    return df
 
 
 def pin_fixture_tables(
@@ -295,11 +369,23 @@ def pin_fixture_tables(
     free. Used by bench.py's warmup (disclosed in its output via
     ``"pinned": true``); the correctness gate does NOT pin, so oracle
     comparisons run the same cold path the driver runs.
+
+    Each table's schema and row count come from its parquet footer,
+    so the only Spark work is one ``persist()`` + ``count()`` per
+    table. Those run from ``min(len(tables), defaultParallelism)``
+    threads under the caller's job group and description; every
+    table is materialised when this returns. If one fails, the tables
+    that succeeded stay pinned, the failed one is unpersisted, and
+    the first error is raised.
     """
+    import pyarrow.parquet as pq
+
     par = spark.sparkContext.defaultParallelism
+    todo: dict[tuple[str, str], DataFrame] = {}
+    # load_table writes session confs: build every frame on this thread
     for name in tables or TABLE_NAMES:
         key = (os.path.abspath(sf_dir), name)
-        if key in _TABLE_CACHE:
+        if key in _TABLE_CACHE or key in todo:
             continue
         base = load_table(spark, sf_dir, name)
         # partition count derives from DATA SIZE, capped at the core
@@ -312,7 +398,8 @@ def pin_fixture_tables(
         # guard with a repartition-if-narrower check. At sf≥1 every
         # big table hits the core cap, so cluster behavior is
         # unchanged.
-        rows = base.count()
+        files = _footer_files(f"{sf_dir}/{name}.parquet")
+        rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files) if files else base.count()
         # text/vector tables carry orders more CPU per row (regex,
         # shingling, array math) than the relational tables — size
         # their tasks by per-row work, not bytes (measured sweet spot
@@ -336,9 +423,25 @@ def pin_fixture_tables(
         else:
             per_task = 50_000
         parts = max(1, min(par, -(-rows // per_task)))
-        df = base.repartition(parts).persist()
-        df.count()
-        _TABLE_CACHE[key] = df
+        todo[key] = base.repartition(parts)
+    if not todo:
+        return
+    # each task gets its own copy of this thread's job group and
+    # description (one shared copy would let the pool's SQL
+    # executions overwrite each other's execution ids)
+    with ThreadPoolExecutor(min(len(todo), par)) as pool:
+        futures = {
+            key: pool.submit(pyspark.inheritable_thread_target(spark)(_materialise), df)
+            for key, df in todo.items()
+        }
+    errors = []
+    for key, fut in futures.items():
+        if fut.exception() is None:
+            _TABLE_CACHE[key] = fut.result()
+        else:
+            errors.append(fut.exception())
+    if errors:
+        raise errors[0]
 
 
 #: caches created INSIDE a query's plan (e.g. dedup_minhash_lsh's

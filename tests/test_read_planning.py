@@ -53,3 +53,23 @@ def test_planning_starts_no_spark_job(spark, table, plan):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_planning_above_the_listing_threshold_starts_no_spark_job(spark, tmp_path):
+    """Above 32 paths Spark would list the files with a distributed
+    job; the log already lists them, so planning starts none, and the
+    session's threshold is left as it was."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    t = LakehouseTable(spark, str(tmp_path / "wide"))
+    t.append(spark.range(0, 33, 1, 33).select(F.col("id").alias("k")))  # 33 one-row files
+    assert len(t.history()[-1].files) == 33
+    before = spark.conf.get(key, None)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-wide", "plan-wide")
+    try:
+        df = t.snapshot()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("plan-wide")) == []
+    assert spark.conf.get(key, None) == before
+    assert df.count() == 33
