@@ -541,8 +541,8 @@ def export_delta_log(
         )
     log_dir = table.path / "_delta_log"
 
-    phys_map = table._physical_of_logical()  # logical → stable physical
-    tmeta = table._read_meta()
+    phys_map = table.column_mapping().physical  # logical → stable physical
+    tmeta = table.meta()
     constraints = dict(tmeta.get("constraints", {}))
     generated = table.generated_columns()
     identity = table.identity_columns()
@@ -570,13 +570,13 @@ def export_delta_log(
         history = table.history()
     else:
         # log-retention window guard (r10 ADVICE): if the exported
-        # head lags below the clean_log cutoff, _commits_between would
+        # head lags below the clean_log cutoff, commits() would
         # silently OMIT the reclaimed commits and the export would be
         # silently incomplete — the exact truncated-replay hazard the
         # retention guards exist to prevent. Raise the recipe instead
         # (the full-export path raises through history() already).
-        table._check_log_window(resume[0])
-        history = table._commits_between(resume[0], None)
+        table.check_log_window(resume[0])
+        history = table.commits(resume[0], None)
     has_dv = any(c.dv_files for c in history)
     exported_protocol: dict | None = None
     if resume is not None:
@@ -643,7 +643,7 @@ def export_delta_log(
         present = [str(table.path / f) for f in files if (table.path / f).exists()]
         if not present:
             return table.snapshot().schema.json() if files else "{}"
-        u = table._fold(table._read_meta(), [(None, f) for f in present])
+        u = table._fold(table.meta(), [(None, f) for f in present])
         return table._read_data(present, u).schema.json()
 
     # ---- merged-live-schema FOLD (round 8): the per-commit schema
@@ -653,7 +653,7 @@ def export_delta_log(
     # schemas fold the same surface from already-parsed log JSON;
     # footers remain only for legacy commits lacking one (fold_broken
     # flips once and the footer path takes over for the rest).
-    meta0 = table._read_meta()
+    meta0 = table.meta()
     dropped0 = {d["physical"] for d in meta0.get("dropped_columns", [])}
     wid0 = meta0.get("widenings") or {}
     fields_live: dict[str, str] = {}  # physical → recorded ddl fold

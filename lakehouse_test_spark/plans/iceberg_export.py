@@ -447,7 +447,7 @@ def _schema_history(
     everywhere behavior)."""
     from lakehouse_test_spark.plans.lakehouse import LakehouseTable as _LT
 
-    meta = table._read_meta()
+    meta = table.meta()
     if head is None:
         head = commits[-1].version
     renames = meta.get("column_renames", [])
@@ -459,7 +459,7 @@ def _schema_history(
 
     # stable field-id per PHYSICAL column (current assignment first —
     # manifests/bounds key on these ids)
-    phys_map = table._physical_of_logical()
+    phys_map = table.column_mapping().physical
     if seed is not None:
         id_of_phys = {k: int(v) for k, v in seed["id_of_phys"].items()}
         # the exported name mapping keys on ice_schema's ids, so a
@@ -808,7 +808,7 @@ def export_iceberg_metadata(
     on a per-micro-batch export loop; time travel to an expired
     snapshot fails loudly. Never touches native data files."""
     meta_dir = table.path / "metadata"
-    tmeta0 = table._read_meta()
+    tmeta0 = table.meta()
     fingerprint = _ice_export_fingerprint(tmeta0)
     resume_md: dict | None = None
     resume_head = -1
@@ -854,7 +854,7 @@ def export_iceberg_metadata(
     # them). Native spec k exports as spec-id k+1; partition field-ids
     # are assigned 1000+ sequentially across specs (fresh ids per
     # spec, always spec-legal).
-    native_specs = table._read_meta().get("partition_specs", [])
+    native_specs = table.meta().get("partition_specs", [])
     export_specs: list[dict] = [{"spec-id": 0, "fields": []}]
     spec_fields: dict[int, list[dict]] = {0: []}
     spec_avro: dict[int, dict | None] = {0: None}
@@ -1051,15 +1051,15 @@ def export_iceberg_metadata(
     native_head = table.latest_version()
     if resume_md is not None:
         # log-retention window guard (r10 ADVICE): a resume point
-        # below the clean_log cutoff means _commits_between would
+        # below the clean_log cutoff means commits() would
         # silently drop the reclaimed commits' appends/rewrites from
         # the exported snapshot chain. Raise the recipe — the
         # degrade-to-full paths already raise correctly via history().
-        table._check_log_window(resume_head)
+        table.check_log_window(resume_head)
     history = (
         table.history()
         if resume_md is None
-        else table._commits_between(resume_head, None)
+        else table.commits(resume_head, None)
     )
     last_seq = 0
     live_entries: dict[str, tuple[int, dict]] = {}  # file → (spec-id, entry)
@@ -1426,7 +1426,7 @@ def export_iceberg_metadata(
     # reader resolves fields through this mapping — the spec's designed
     # mechanism for exactly that file population. Renamed columns list
     # both names (logical first).
-    phys_map = table._physical_of_logical()
+    phys_map = table.column_mapping().physical
     name_mapping = [
         {
             "field-id": f["id"],
@@ -1530,14 +1530,14 @@ def export_iceberg_metadata(
                         sorted(
                             {
                                 d["physical"]
-                                for d in table._read_meta().get(
+                                for d in table.meta().get(
                                     "dropped_columns", []
                                 )
                             }
                         )
                     )
                 }
-                if table._read_meta().get("dropped_columns")
+                if table.meta().get("dropped_columns")
                 else {}
             ),
         },

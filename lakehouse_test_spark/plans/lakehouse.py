@@ -35,6 +35,7 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
+from typing import NamedTuple
 
 import time as _time
 from dataclasses import field as dataclasses_field
@@ -181,6 +182,39 @@ def _ddl(schema: dict) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in schema.items())
 
 
+class ColumnMapping(NamedTuple):
+    """A table's column mapping (Delta ``columnMapping.mode = name``):
+    data files keep the name a column was created under, and
+    ``_meta.json`` records renames, drops and widenings on top."""
+
+    #: physical (file) column → current logical name; every name a
+    #: rename chain passed through maps to its end, and dropped
+    #: physicals are absent (a re-add mints a fresh physical, so a
+    #: dead one must never surface under the re-added name)
+    logical: dict[str, str]
+    #: logical name → the stable physical name it is written under
+    physical: dict[str, str]
+    #: dropped physicals: every reader projects them away
+    dropped: set[str]
+    #: physical → declared widening target type
+    widenings: dict[str, str]
+
+
+def _column_mapping(meta: dict) -> ColumnMapping:
+    logical: dict[str, str] = {}
+    physical: dict[str, str] = {}
+    for old, new in meta.get("column_renames", []):
+        for k, v in list(logical.items()):
+            if v == old:
+                logical[k] = new
+        logical.setdefault(old, new)
+        physical[new] = physical.pop(old, old)
+    dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
+    for phys in dropped:
+        logical.pop(phys, None)
+    return ColumnMapping(logical, physical, dropped, dict(meta.get("widenings") or {}))
+
+
 class ConcurrentModificationError(RuntimeError):
     """A concurrent commit conflicts with this transaction — the Delta
     conflict-matrix outcome when rebasing is unsafe: a restate
@@ -277,8 +311,9 @@ class LakehouseTable:
     ):
         self.spark = spark
         self.path = Path(path)
+        #: created by the first write (``_put_if_absent``,
+        #: ``_write_meta``): reading a table never creates one
         self.log_dir = self.path / "_log"
-        self.log_dir.mkdir(parents=True, exist_ok=True)
         #: opt-in migration shim for tables written before the explicit
         #: Commit.txn field: parse legacy '<appId>-b<N>' operation
         #: labels as idempotence markers (see txn_marker). One
@@ -304,6 +339,7 @@ class LakehouseTable:
         the exact lost-update the commit protocol exists to prevent.
         A crash never leaves torn JSON at ``target``; the tmp file is
         always removed. Returns True iff we won."""
+        target.parent.mkdir(parents=True, exist_ok=True)
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
         tmp.write_text(json.dumps(commit.__dict__))
         try:
@@ -333,8 +369,11 @@ class LakehouseTable:
           blind-append rule).
 
         A rebase only renumbers the log entry; the data files are
-        already written. Every published commit then runs the
-        checkpoint cadence."""
+        already written. Each attempt stamps ``ts`` as the time the
+        commit lands on main, never earlier than the head's (Delta's
+        in-commit timestamps), so timestamps never decrease with the
+        version — the timestamp resolvers rely on it. Every published
+        commit then runs the checkpoint cadence."""
         if self._pre_publish_hook is not None:
             self._pre_publish_hook()
         while True:
@@ -342,6 +381,8 @@ class LakehouseTable:
             # JSON at a stale version, so a taken version is not always
             # visible as a failed put
             head = self.latest_version()
+            prev = self.commit(head) if head >= 0 else None
+            commit.ts = max(_time.time(), (prev and prev.ts) or 0.0)
             if head < commit.version:
                 if self._put_if_absent(commit, self._commit_path(commit.version)):
                     break
@@ -352,7 +393,7 @@ class LakehouseTable:
                 # a retention-cleaned log too
                 inter = [
                     (c.version, c.operation)
-                    for c in self._commits_between(commit.version - 1, None)
+                    for c in self.commits(commit.version - 1, None)
                 ]
                 raise ConcurrentModificationError(
                     f"{commit.operation} computed against version "
@@ -364,11 +405,11 @@ class LakehouseTable:
                 # log: a reclaimed conflicting commit silently missing
                 # here would let a stale rebase resurrect rewritten
                 # rows, so a base below the cutoff raises the recipe
-                self._check_log_window(commit.version - 1)
+                self.check_log_window(commit.version - 1)
                 bin_files = set(commit.removed_files)
                 conflicts = [
                     (c.version, c.operation)
-                    for c in self._commits_between(commit.version - 1, head)
+                    for c in self.commits(commit.version - 1, head)
                     if c.restate or c.dv_files or bin_files & set(c.removed_files or [])
                 ]
                 if conflicts:
@@ -471,6 +512,34 @@ class LakehouseTable:
             d["data_change"] = d["operation"] != "compact"
         return Commit(**d)
 
+    def _log_versions(self) -> list[int]:
+        """Versions of the commit JSONs on the main log, unsorted —
+        the one listing of ``_log/`` (a missing log lists empty).
+        scandir, not glob: at 10⁵ commits Path construction dominates
+        the listing itself."""
+        out: list[int] = []
+        try:
+            with os.scandir(self.log_dir) as it:
+                for e in it:
+                    nm = e.name
+                    if nm.endswith(".json"):
+                        try:
+                            out.append(int(nm[:-5]))
+                        except ValueError:
+                            pass
+        except FileNotFoundError:
+            pass
+        return out
+
+    def commit(self, version: int) -> Commit | None:
+        """The commit at ``version`` (None when it has no JSON: never
+        written, or reclaimed by ``clean_log``) — one file read, no
+        listing."""
+        try:
+            return self._commit_of(json.loads(self._commit_path(version).read_text()))
+        except FileNotFoundError:
+            return None
+
     def history(self, allow_truncated: bool = False) -> list[Commit]:
         """EVERY commit ever (the audit/time-travel surface) — full
         log parse by design; snapshot PLANNING goes through
@@ -485,34 +554,19 @@ class LakehouseTable:
         and apply their own completeness rule."""
         if not allow_truncated:
             self.require_full_history("this full-history walk")
-        return [
-            self._commit_of(json.loads(p.read_text()))
-            for p in sorted(self.log_dir.glob("*.json"))
-        ]
+        return self.commits()
 
-    def _commits_between(self, after: int, upto: int | None) -> list[Commit]:
-        """Commits with ``after < version <= upto`` — parses only the
-        tail JSONs (the file LISTING is still O(commits), like Delta's
-        _delta_log LIST; the expensive part, parsing, is O(tail)).
-        scandir, not glob: at 10⁵ commits Path construction dominates
-        the listing itself."""
-        tail: list[tuple[int, str]] = []
-        with os.scandir(self.log_dir) as it:
-            for e in it:
-                nm = e.name
-                if not nm.endswith(".json"):
-                    continue
-                try:
-                    v = int(nm[:-5])
-                except ValueError:
-                    continue
-                if v <= after or (upto is not None and v > upto):
-                    continue
-                tail.append((v, e.path))
-        tail.sort()
-        return [
-            self._commit_of(json.loads(Path(p).read_text())) for _v, p in tail
-        ]
+    def commits(self, after: int = -1, upto: int | None = None) -> list[Commit]:
+        """Commits with ``after < version <= upto`` (None: the head),
+        in version order — one listing, and only the window's JSONs
+        are parsed (the LISTING is O(commits), like Delta's _delta_log
+        LIST; the expensive part, parsing, is O(window)). Versions
+        ``clean_log`` reclaimed are simply absent: callers that need a
+        complete window call :meth:`check_log_window` first."""
+        window = sorted(
+            v for v in self._log_versions() if v > after and (upto is None or v <= upto)
+        )
+        return [c for c in map(self.commit, window) if c is not None]
 
     # -- commit-log checkpoints (Delta _last_checkpoint analog) ---------------
 
@@ -559,7 +613,7 @@ class LakehouseTable:
             # duplicate-replay the flag exists to prevent. One full
             # parse, once, during the migration session.
             txn, after = {}, -1
-        for c in self._commits_between(after, v):
+        for c in self.commits(after, v):
             t = txn_marker(c, self.legacy_txn_compat)
             if t:
                 txn[t[0]] = max(txn.get(t[0], -1), t[1])
@@ -748,7 +802,7 @@ class LakehouseTable:
             # the newly-written checkpoint covers everything the clean
             # reclaims. Same never-a-gate rule as the checkpoint.
             try:
-                keep = self._read_meta().get("log_retention_versions")
+                keep = self.meta().get("log_retention_versions")
                 if keep:
                     self.clean_log(keep_versions=int(keep))
             except (OSError, ValueError, KeyError, json.JSONDecodeError):
@@ -758,7 +812,7 @@ class LakehouseTable:
                 # clean_log applies to its own pointer reads
                 pass
 
-    def _stream_batch_high(self, prefix: str) -> int:
+    def stream_batch_high(self, prefix: str) -> int:
         """Highest committed micro-batch id for ``prefix`` (the Delta
         txn-action high-water): pointer txn map + tail commits —
         O(tail) per micro-batch instead of the full history scan."""
@@ -783,30 +837,19 @@ class LakehouseTable:
             # migration session loudly instead (r10 ADVICE).
             self.require_full_history("legacy txn-marker migration scan")
             high, after = -1, -1
-        for c in self._commits_between(after, None):
+        for c in self.commits(after, None):
             t = txn_marker(c, self.legacy_txn_compat)
             if t and t[0] == prefix:
                 high = max(high, t[1])
         return high
 
+    _stream_batch_high = stream_batch_high  # the older name, still called by tests and tools
+
     def latest_version(self) -> int:
         """The offload-watermark analog (§2a op 29): everything at or
-        below this version is durable and readable."""
-        # scandir, not glob: this runs once per commit/offset poll, and
-        # at 10⁵ commits Path construction dominates the listing
-        hi = -1
-        try:
-            with os.scandir(self.log_dir) as it:
-                for e in it:
-                    nm = e.name
-                    if nm.endswith(".json"):
-                        try:
-                            hi = max(hi, int(nm[:-5]))
-                        except ValueError:
-                            pass
-        except FileNotFoundError:
-            return -1
-        return hi
+        below this version is durable and readable (-1: no commits).
+        One listing, zero JSON parses."""
+        return max(self._log_versions(), default=-1)
 
     # -- writes --------------------------------------------------------------
 
@@ -881,7 +924,10 @@ class LakehouseTable:
                 "values live in dir names, not in the files; import via a "
                 "partition-reconstructing rewrite instead"
             )
-        return self._create(self._describe(files, "convert", stats_cols=stats_cols))
+        schema = self._fold_schemas(self._footer_schema_sources(files), set(), {})
+        return self._create(
+            self._describe(files, "convert", stats_cols=stats_cols, schema=schema)
+        )
 
     def _commit_restate(
         self,
@@ -1289,17 +1335,16 @@ class LakehouseTable:
         from pyspark.sql import functions as F
 
         cols = key_cols + attr_cols
-        snap = self.pin()
-        if snap.version >= 0:
-            existing = self._read(snap).select(
+        base = self.latest_version()
+        obs = updates.select(*cols, effective_col)
+        if base >= 0:
+            existing = self._read(self.pin(base)).select(
                 *cols, F.col("valid_from").alias(effective_col)
             )
-            obs = existing.unionByName(updates.select(*cols, effective_col))
-        else:
-            obs = updates.select(*cols, effective_col)
+            obs = existing.unionByName(obs)
         hist = scd2_history(obs, key_cols, attr_cols, effective_col)
         return self._commit_restate(
-            hist, operation="scd2", data_change=True, read_version=snap.version
+            hist, operation="scd2", data_change=True, read_version=base
         )
 
     def clone(
@@ -1374,7 +1419,7 @@ class LakehouseTable:
             # surfaces LOGICAL names — its files need no mapping
             target.append(self._read(snap), operation="clone_deep")
         src_meta = snap.meta
-        meta = target._read_meta()
+        meta = target.meta()
         # identity carries WITH its allocated high-water mark — a
         # clone that restarted allocation at 0 would mint colliding
         # ids on its first append
@@ -1532,7 +1577,7 @@ class LakehouseTable:
         # incremental reclustering keys new data on the SAME grid —
         # Delta stores the clustering columns in table metadata the
         # same way
-        meta = self._read_meta()
+        meta = self.meta()
         meta["clustering"] = {
             "cols": list(cols),
             "bounds": bounds,
@@ -1608,7 +1653,7 @@ class LakehouseTable:
         is optional. Returns None when nothing new exists. Refuses
         under live deletion vectors (position-keyed DVs don't survive
         rewrites — same rule as ``compact_files``)."""
-        meta = self._read_meta()
+        meta = self.meta()
         spec = meta.get("clustering")
         if not spec:
             raise ValueError("hilbert_cluster_incremental: run hilbert_cluster first")
@@ -1646,7 +1691,7 @@ class LakehouseTable:
             data_change=False,
             removed_files=sorted(new_files),
         )
-        meta = self._read_meta()
+        meta = self.meta()
         if meta.get("clustering"):
             meta["clustering"]["version"] = out.version
             self._write_meta(meta)
@@ -1669,7 +1714,7 @@ class LakehouseTable:
             ck = self._read_checkpoint()
         if ck is not None and (version is None or version >= ck["version"]):
             commits = [self._commit_of(dict(d)) for d in ck["live_commits"]]
-            commits += self._commits_between(ck["version"], version)
+            commits += self.commits(ck["version"], version)
         else:
             commits = self.history(allow_truncated=True)
             if version is not None:
@@ -1682,7 +1727,7 @@ class LakehouseTable:
             # smaller table (same hazard class as the delta-export
             # reader's _replay_state guard)
             if not any(c.restate for c in commits):
-                earliest = self._log_earliest()
+                earliest = self.log_earliest()
                 if earliest > 0:
                     raise LogRetentionError(
                         f"time travel to v{version} needs commit JSONs "
@@ -1729,7 +1774,9 @@ class LakehouseTable:
         once; every read of the result sees that one version."""
         if sum(x is not None for x in (version, timestamp, tag, branch)) > 1:
             raise ValueError("pass at most one of version, timestamp, tag, branch")
-        meta = self._read_meta()
+        if not self.path.exists():
+            raise FileNotFoundError(f"no lakehouse table at {self.path}")
+        meta = self.meta()
         if tag is not None:
             known = meta.get("tags", {})
             if tag not in known:
@@ -1797,25 +1844,88 @@ class LakehouseTable:
 
     def version_at_timestamp(self, ts: float) -> int:
         """Newest version committed at or before epoch-seconds ``ts``
-        (Delta ``TIMESTAMP AS OF`` resolution). Raises ValueError when
-        ``ts`` predates the first commit."""
-        cands = [
-            c.version
-            for c in self.history(allow_truncated=True)
-            if c.ts is not None and c.ts <= ts
-        ]
-        if not cands:
-            if self._log_earliest() > 0:
-                raise LogRetentionError(
-                    f"no surviving commit at or before timestamp {ts}: "
-                    f"clean_log reclaimed JSONs below "
-                    f"v{self._log_earliest()} — time travel by "
-                    "timestamp only reaches retained commits"
-                )
-            raise ValueError(
-                f"no commit at or before timestamp {ts} (table born later)"
+        (Delta ``TIMESTAMP AS OF`` and ``endingTimestamp``). Commit
+        timestamps never decrease with the version (``_publish``), so
+        the walk reads JSONs newest-first and stops at the first
+        match: O(commits after ``ts``) parses. Legacy commits without
+        a timestamp are skipped (unknown time, not epoch 0). Raises
+        ValueError when ``ts`` predates the first commit, and
+        :class:`LogRetentionError` when only reclaimed commits could
+        match."""
+        for v in sorted(self._log_versions(), reverse=True):
+            c = self.commit(v)
+            if c is not None and c.ts is not None and c.ts <= ts:
+                return v
+        if self.log_earliest() > 0:
+            raise LogRetentionError(
+                f"no surviving commit at or before timestamp {ts}: "
+                f"clean_log reclaimed JSONs below "
+                f"v{self.log_earliest()} — time travel by "
+                "timestamp only reaches retained commits"
             )
-        return max(cands)
+        raise ValueError(
+            f"no commit at or before timestamp {ts}: it predates the "
+            "table's first commit"
+        )
+
+    def first_version_since(self, ts: float, strict: bool = True) -> int:
+        """First version committed at or after epoch-seconds ``ts``
+        (Delta's ``startingTimestamp``), by the same bounded
+        newest-first walk as :meth:`version_at_timestamp`; legacy
+        commits without a timestamp are skipped.
+
+        Loud edges (never a silently wrong feed): a timestamp past the
+        newest commit raises (a typo'd future timestamp must not start
+        an empty feed), and so does a bound at or below the oldest
+        timestamped survivor of a retention-cleaned log — a reclaimed
+        (or surviving but untimestamped) commit may have matched it.
+        ``strict=False`` returns the survivor instead of raising on
+        that retention edge (a stream reader's construction: a restart
+        fast-forwards past it before reading anything)."""
+        vs = sorted(self._log_versions(), reverse=True)
+        if not vs:
+            raise ValueError(f"no commits under {self.path}")
+        cand = None
+        newest_known: tuple[int, float] | None = None
+        oldest_known: tuple[int, float] | None = None
+        for v in vs:
+            c = self.commit(v)
+            if c is None or c.ts is None:
+                continue  # legacy commit: unknown time, not epoch 0
+            if newest_known is None:
+                newest_known = (v, c.ts)
+            oldest_known = (v, c.ts)
+            if c.ts < ts:
+                break
+            cand = v
+        if newest_known is None:
+            raise ValueError(
+                f"no timestamped commits under {self.path}: startingTimestamp "
+                "cannot resolve (legacy log) — use startingVersion"
+            )
+        if newest_known[1] < ts:
+            raise ValueError(
+                f"startingTimestamp {ts} is greater than the newest "
+                f"commit's timestamp ({newest_known[1]} at "
+                f"v{newest_known[0]}); use a timestamp at or before the "
+                "head (Delta raises the same way)"
+            )
+        if (
+            strict
+            and cand == oldest_known[0]
+            and ts <= oldest_known[1]
+            and self.log_earliest() > 0
+        ):
+            # no survivor BELOW the bound: the true first-at-or-after
+            # may be a reclaimed commit under the retention cutoff
+            raise ValueError(
+                f"LogRetentionError: startingTimestamp {ts} is at or "
+                f"before the oldest surviving timestamped commit "
+                f"(v{oldest_known[0]}); clean_log reclaimed the "
+                "commits that may match — start from a snapshot "
+                "(startingMode=snapshot) or a surviving version"
+            )
+        return cand
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Iceberg-style named TAG: an immutable ref to a version
@@ -1825,7 +1935,7 @@ class LakehouseTable:
         v = self.latest_version() if version is None else version
         if v < 0 or v > self.latest_version():
             raise ValueError(f"tag {name!r}: no version {v}")
-        meta = self._read_meta()
+        meta = self.meta()
         tags = meta.setdefault("tags", {})
         if name in tags:
             raise ValueError(f"tag {name!r} already exists at v{tags[name]}")
@@ -1834,7 +1944,7 @@ class LakehouseTable:
         return v
 
     def tags(self) -> dict[str, int]:
-        return dict(self._read_meta().get("tags", {}))
+        return dict(self.meta().get("tags", {}))
 
     # -- branches (append-only write isolation, Iceberg/Nessie-style) ---------
 
@@ -1842,7 +1952,7 @@ class LakehouseTable:
         return self.log_dir / f"branch-{name}"
 
     def branches(self) -> dict[str, dict]:
-        return dict(self._read_meta().get("branches", {}))
+        return dict(self.meta().get("branches", {}))
 
     def create_branch(self, name: str) -> int:
         """Fork a named APPEND-ONLY branch at the current head:
@@ -1854,7 +1964,7 @@ class LakehouseTable:
         head = self.latest_version()
         if head < 0:
             raise ValueError("create_branch: empty table")
-        meta = self._read_meta()
+        meta = self.meta()
         brs = meta.setdefault("branches", {})
         if name in brs:
             raise ValueError(f"branch {name!r} already exists")
@@ -1930,7 +2040,7 @@ class LakehouseTable:
                 if parent.exists() and not any(parent.iterdir()):
                     parent.rmdir()
         shutil.rmtree(self._branch_dir(name), ignore_errors=True)
-        meta = self._read_meta()
+        meta = self.meta()
         meta["branches"].pop(name, None)
         self._write_meta(meta)
         return deleted
@@ -1950,13 +2060,13 @@ class LakehouseTable:
         # the retry-dedup below walks main's commits since the fork; a
         # retention-cleaned window there could silently miss an
         # already-merged copy and replay it (duplicate rows)
-        self._check_log_window(fork)
+        self.check_log_window(fork)
         # retry-safety: a crash between publishing a commit onto main
         # and unlinking the branch copy leaves it in BOTH logs; a naive
         # replay would duplicate its rows. A branch commit whose file
         # list already sits at a main version after the fork was
         # merged by the crashed attempt: drop its copy.
-        merged = {tuple(c.files) for c in self._commits_between(fork, None)}
+        merged = {tuple(c.files) for c in self.commits(fork, None)}
         for p in sorted(self._branch_dir(name).glob("*.json")):
             c = self._commit_of(json.loads(p.read_text()))
             if tuple(c.files) not in merged:
@@ -1967,7 +2077,7 @@ class LakehouseTable:
             # branch ref for a retry
             p.unlink()
         shutil.rmtree(self._branch_dir(name), ignore_errors=True)
-        meta = self._read_meta()
+        meta = self.meta()
         meta["branches"].pop(name, None)
         self._write_meta(meta)
         return self.latest_version()
@@ -2053,11 +2163,11 @@ class LakehouseTable:
         a fresh snapshot."""
         if since_version < 0:
             return self.snapshot(version=upto_version)
-        self._check_log_window(since_version)
+        self.check_log_window(since_version)
         # O(tail) cursor: parse only commits past the cursor (the same
         # cost class the checkpointed writer uses) — an incremental
         # poll on a long-lived table must never re-read the whole log
-        newer = self._commits_between(since_version, upto_version)
+        newer = self.commits(since_version, upto_version)
         logical_restates = [
             c for c in newer if (c.restate and c.data_change) or c.dv_files
         ]
@@ -2081,7 +2191,7 @@ class LakehouseTable:
         # the window's own recorded schemas; logical names, like
         # snapshot/scan_pruned: incremental readers must see the same
         # names the batch readers see
-        meta = self._read_meta()
+        meta = self.meta()
         return self._apply_renames(
             self._read_data([f for _c, f in pairs], self._fold(meta, pairs)), meta
         )
@@ -2190,11 +2300,11 @@ class LakehouseTable:
                 )
             )
             return self._apply_renames(out0, snap.meta)
-        self._check_log_window(since_version)
+        self.check_log_window(since_version)
         # O(tail) cursor: parse only commits past the cursor (the same
         # cost class the checkpointed writer uses) — an incremental
         # poll on a long-lived table must never re-read the whole log
-        newer = self._commits_between(since_version, upto_version)
+        newer = self.commits(since_version, upto_version)
         hard_restates = [c for c in newer if c.restate and c.data_change]
         if hard_restates:
             ops = [(c.version, c.operation) for c in hard_restates]
@@ -2203,7 +2313,7 @@ class LakehouseTable:
                 "restart from a fresh snapshot"
             )
         parts: list[DataFrame] = []
-        meta = self._read_meta()
+        meta = self.meta()
 
         def _ts_col(c: Commit):
             us = ts_micros(c.ts)
@@ -2302,12 +2412,19 @@ class LakehouseTable:
     def _meta_path(self) -> Path:
         return self.path / "_meta.json"
 
-    def _read_meta(self) -> dict:
+    def meta(self) -> dict:
+        """``_meta.json`` (constraints, tags, branches, renames, drops,
+        widenings, horizons) as a fresh dict. Changing the dict
+        changes nothing on disk: other modules only read it, and this
+        class's own methods write it back through ``_write_meta``."""
         if self._meta_path().exists():
             return json.loads(self._meta_path().read_text())
         return {"constraints": {}, "vacuum_horizon": 0}
 
+    _read_meta = meta  # the older name, still called by tests
+
     def _write_meta(self, meta: dict) -> None:
+        self.path.mkdir(parents=True, exist_ok=True)
         tmp = self.path / f".meta-{uuid.uuid4().hex}"
         tmp.write_text(json.dumps(meta))
         os.rename(tmp, self._meta_path())
@@ -2326,7 +2443,7 @@ class LakehouseTable:
                 raise ConstraintViolationError(
                     f"constraint {name!r} ({expr}) already violated by existing rows"
                 )
-        meta = self._read_meta()
+        meta = self.meta()
         meta.setdefault("constraints", {})[name] = expr
         self._write_meta(meta)
 
@@ -2336,12 +2453,12 @@ class LakehouseTable:
         ``expr`` (column absent from the written frame) or must
         supply values EQUAL to the expression (validated atomically,
         like a CHECK constraint — Delta's writer contract)."""
-        meta = self._read_meta()
+        meta = self.meta()
         meta.setdefault("generated_columns", {})[name] = expr
         self._write_meta(meta)
 
     def generated_columns(self) -> dict[str, str]:
-        return dict(self._read_meta().get("generated_columns", {}))
+        return dict(self.meta().get("generated_columns", {}))
 
     def _apply_generated_columns(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
@@ -2389,7 +2506,7 @@ class LakehouseTable:
                 "identity columns must be declared before the first write "
                 "(Delta allows them only at CREATE TABLE)"
             )
-        meta = self._read_meta()
+        meta = self.meta()
         ident = meta.setdefault("identity", {})
         if col in ident:
             raise ValueError(f"identity column {col!r} already declared")
@@ -2397,7 +2514,7 @@ class LakehouseTable:
         self._write_meta(meta)
 
     def identity_columns(self) -> dict[str, dict]:
-        return dict(self._read_meta().get("identity", {}))
+        return dict(self.meta().get("identity", {}))
 
     def _apply_identity(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
@@ -2413,7 +2530,7 @@ class LakehouseTable:
         # allocation itself serializes on a file mutex, the same way
         # Delta serializes identity on its txn high-water action
         with self._meta_mutex():
-            meta = self._read_meta()
+            meta = self.meta()
             ident = meta.get("identity", {})
             for name, spec in ident.items():
                 if name in df.columns:
@@ -2454,6 +2571,7 @@ class LakehouseTable:
         import time as _time
 
         lock = self.path / ".meta.lock"
+        self.path.mkdir(parents=True, exist_ok=True)
 
         def _holder_dead() -> bool:
             try:
@@ -2549,7 +2667,7 @@ class LakehouseTable:
         return _held()
 
     def constraints(self) -> dict[str, str]:
-        return dict(self._read_meta().get("constraints", {}))
+        return dict(self.meta().get("constraints", {}))
 
     def _validate_constraints(self, df: DataFrame) -> None:
         """One pass over the incoming batch evaluates ALL constraints
@@ -2587,7 +2705,7 @@ class LakehouseTable:
         (a→b→c) in metadata order. Mapping is table-level
         current-state metadata: like Delta, time-traveled reads also
         surface the LOGICAL names."""
-        meta = self._read_meta()
+        meta = self.meta()
         # Delta's rule: a column referenced by a CHECK constraint or a
         # generated-column expression cannot be renamed (the stored
         # expression text would silently dangle and brick every future
@@ -2680,7 +2798,7 @@ class LakehouseTable:
         re-added column. Same referent guards as :meth:`rename_column`
         (constraints / generated columns / partition specs pin their
         columns)."""
-        meta = self._read_meta()
+        meta = self.meta()
         referents = []
         for cname, expr in (meta.get("constraints") or {}).items():
             if _re.search(rf"\b{_re.escape(name)}\b", expr):
@@ -2738,8 +2856,8 @@ class LakehouseTable:
             if name not in cols:
                 raise ValueError(f"widen_column: no column {name!r}; have {cols}")
         phys = self._physical_of_logical().get(name, name)
-        current = self.pin().schema.get(phys)
-        meta = self._read_meta()
+        current = self.pin().schema.get(phys) if self.latest_version() >= 0 else None
+        meta = self.meta()
         prior = (meta.get("widenings") or {}).get(phys)
         src = prior or current
         if src is not None and not self._widens_to(src, target):
@@ -2967,7 +3085,7 @@ class LakehouseTable:
         resolves to a DROPPED physical is a re-add — mint a fresh
         physical name (rename-chain entry), giving it a new field
         identity so old values never leak in."""
-        meta = self._read_meta()
+        meta = self.meta()
         dropped = meta.get("dropped_columns", [])
         if not dropped:
             return
@@ -2985,7 +3103,7 @@ class LakehouseTable:
     def _apply_widenings_write(self, df: DataFrame) -> DataFrame:
         """Writer-side half of type widening: new files carry the
         widened type (df here is already in PHYSICAL names)."""
-        wid = self._read_meta().get("widenings") or {}
+        wid = self.meta().get("widenings") or {}
         dts = dict(df.dtypes)
         for phys, target in wid.items():
             if phys in dts and dts[phys] != target:
@@ -3006,17 +3124,14 @@ class LakehouseTable:
                 df = df.withColumnRenamed(old, new)
         return df
 
+    def column_mapping(self, meta: dict | None = None) -> "ColumnMapping":
+        """The table's column mapping, from ``meta`` (default: read
+        ``_meta.json`` now; pass a :class:`Snapshot`'s ``meta`` to map
+        that pinned read) — the one walk of the rename chain."""
+        return _column_mapping(self.meta() if meta is None else meta)
+
     def _physical_of_logical(self) -> dict[str, str]:
-        """Logical column name → its stable PHYSICAL name (the name
-        the column was created under: rename chains walked backward).
-        Delta column-mapping semantics — a rename never changes what
-        is written in data files, so every vintage shares one
-        physical layout and the table is exportable with
-        ``delta.columnMapping.mode = name``."""
-        phys: dict[str, str] = {}
-        for old, new in self._read_meta().get("column_renames", []):
-            phys[new] = phys.pop(old, old)
-        return phys
+        return self.column_mapping().physical
 
     def _apply_reverse_renames(self, df: DataFrame) -> DataFrame:
         """Map logical→physical names before a data-file write (the
@@ -3050,7 +3165,7 @@ class LakehouseTable:
         partition pruning skips nothing in them (scan-safe, exactly
         Iceberg's contract when a spec is evolved). Spec history is
         versioned metadata (spec_id, from_version)."""
-        meta = self._read_meta()
+        meta = self.meta()
         specs = meta.setdefault("partition_specs", [])
         specs.append(
             {
@@ -3066,7 +3181,7 @@ class LakehouseTable:
         Each item is a bare column (identity) or an Iceberg-style
         transform: ``month(col)``, ``bucket(N, col)``,
         ``truncate(N, col)``."""
-        specs = self._read_meta().get("partition_specs", [])
+        specs = self.meta().get("partition_specs", [])
         return list(specs[-1]["cols"]) if specs else []
 
     _TRANSFORM_RE = _re.compile(
@@ -3216,13 +3331,14 @@ class LakehouseTable:
 
         errors: list[str] = []
         checked_files = 0
-        meta = self._read_meta()
+        meta = self.meta()
         try:
             live = self._live_files()
         except (json.JSONDecodeError, KeyError, TypeError, ValueError) as e:
             # fsck must REPORT a torn/corrupt commit JSON, never crash
             # on it — locate the offender by parsing one-by-one
-            for p in sorted(self.log_dir.glob("*.json")):
+            for v in sorted(self._log_versions()):
+                p = self._commit_path(v)
                 try:
                     self._commit_of(json.loads(p.read_text()))
                 except Exception as pe:  # noqa: BLE001 — naming it is the point
@@ -3308,7 +3424,7 @@ class LakehouseTable:
                         if c.version > base.version and not c.restate
                     ]
                 slow = [(c.version, tuple(c.files)) for c in full_commits]
-                earliest = self._log_earliest()
+                earliest = self.log_earliest()
                 if earliest > 0:
                     # retention-cleaned log: the full parse legitimately
                     # misses live commits below the cutoff — cross-check
@@ -3470,7 +3586,7 @@ class LakehouseTable:
         for d in sorted(data_dir.glob("*"), reverse=True):
             if d.is_dir() and not any(d.iterdir()):
                 d.rmdir()
-        meta = self._read_meta()
+        meta = self.meta()
         meta["vacuum_horizon"] = horizon
         self._write_meta(meta)
         return {"deleted": deleted, "horizon": horizon}
@@ -3523,10 +3639,10 @@ class LakehouseTable:
                 )["version"]
             )
         except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            return {"deleted": 0, "earliest": self._log_earliest()}
+            return {"deleted": 0, "earliest": self.log_earliest()}
         cutoff = min(ckv, head - keep_versions + 1)
         if cutoff <= 0:
-            return {"deleted": 0, "earliest": self._log_earliest()}
+            return {"deleted": 0, "earliest": self.log_earliest()}
         now = _time.time()
         # PLAN first (no deletes yet), ASCENDING, stopping at the first
         # age-kept version: the survivors must be a CONTIGUOUS suffix
@@ -3536,11 +3652,8 @@ class LakehouseTable:
         # would silently lose a reader's window)
         victims: list[tuple[int, Path]] = []
         earliest = cutoff
-        for p in sorted(self.log_dir.glob("*.json")):
-            try:
-                v = int(p.stem)
-            except ValueError:
-                continue
+        for v in sorted(self._log_versions()):
+            p = self._commit_path(v)
             if v >= cutoff:
                 break
             if min_age_seconds:
@@ -3556,7 +3669,7 @@ class LakehouseTable:
         if dry_run:
             return {
                 "deleted": 0,
-                "earliest": self._log_earliest(),
+                "earliest": self.log_earliest(),
                 "would_delete": [v for v, _p in victims],
             }
         # WRITE-AHEAD: record the new earliest BEFORE any unlink — a
@@ -3564,7 +3677,7 @@ class LakehouseTable:
         # refuse some still-readable versions until the next clean)
         # instead of DISABLED (silently replaying a truncated chain,
         # the exact hazard this feature's guards exist to prevent)
-        meta = self._read_meta()
+        meta = self.meta()
         meta["log_earliest"] = max(meta.get("log_earliest", 0), earliest)
         self._write_meta(meta)
         deleted = 0
@@ -3584,25 +3697,27 @@ class LakehouseTable:
         unchanged (loud recipes below the cutoff)."""
         if keep_versions is not None and keep_versions < 0:
             raise ValueError(f"keep_versions: {keep_versions}")
-        meta = self._read_meta()
+        meta = self.meta()
         if keep_versions:
             meta["log_retention_versions"] = int(keep_versions)
         else:
             meta.pop("log_retention_versions", None)
         self._write_meta(meta)
 
-    def _log_earliest(self) -> int:
+    def log_earliest(self) -> int:
         """Earliest commit version whose JSON is guaranteed present
         (0 = never cleaned). Every completeness guard checks this."""
-        return int(self._read_meta().get("log_earliest", 0))
+        return int(self.meta().get("log_earliest", 0))
 
-    def _check_log_window(self, since_version: int) -> None:
+    _log_earliest = log_earliest  # the older name, still called by tests
+
+    def check_log_window(self, since_version: int) -> None:
         """Incremental-window completeness: a cursor whose window
         floor predates the earliest surviving commit JSON must raise
-        the recipe — ``_commits_between`` would otherwise silently
+        the recipe — :meth:`commits` would otherwise silently
         skip the reclaimed versions and the reader would lose their
         changes (the lagging-stream hazard of log retention)."""
-        earliest = self._log_earliest()
+        earliest = self.log_earliest()
         if earliest > 0 and since_version + 1 < earliest:
             raise LogRetentionError(
                 f"cursor v{since_version} predates the log-retention "
@@ -3615,7 +3730,7 @@ class LakehouseTable:
         TRUNCATED chain — for consumers that need every commit ever
         (full exports, audit walks); incremental consumers resume
         from their own cursor and never call this."""
-        earliest = self._log_earliest()
+        earliest = self.log_earliest()
         if earliest > 0:
             raise LogRetentionError(
                 f"{what} needs the full commit history, but clean_log "

@@ -88,7 +88,6 @@ with ``startingMode=snapshot``.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Sequence
 from pathlib import Path
 
@@ -98,89 +97,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-
-
-def _evolution_of(path: Path) -> tuple[dict[str, str], set[str], dict[str, str]]:
-    """(physical column → current logical name, dropped physicals,
-    physical → declared widening target) — loaded straight from
-    ``_meta.json`` so the DataSource stays standalone (no
-    LakehouseTable/Spark). The rename chain is walked forward; a
-    physical recorded in ``dropped_columns`` is EXCLUDED from the map
-    (and projected away by logical-mode reads): its chain ended at
-    the DROP, and a later re-add of the same logical name minted a
-    FRESH physical — mapping the dead physical to that name would
-    resurrect dropped values under the re-added column (the r6
-    judge's repro; native ``read_changes_cdf`` and
-    ``LakehouseStreamReader._dropped`` apply the same rule).
-    Widenings override the schema's declared type in logical mode
-    (native parity: a widened column surfaces its target type even
-    before any post-widen file exists)."""
-    meta = path / "_meta.json"
-    if not meta.exists():
-        return {}, set(), {}
-    md = json.loads(meta.read_text())
-    out: dict[str, str] = {}
-    for old, new in md.get("column_renames", []):
-        for k, v in list(out.items()):
-            if v == old:
-                out[k] = new
-        out.setdefault(old, new)
-    dropped = {d["physical"] for d in md.get("dropped_columns", [])}
-    for phys in dropped:
-        out.pop(phys, None)
-    return out, dropped, dict(md.get("widenings") or {})
-
-
-def _ddl_for_table(path: Path, logical: bool = False) -> str:
-    """Derive the CDF schema (data columns + _change_type +
-    _commit_version + _commit_timestamp) from the newest commit's
-    first data file. With
-    ``logical`` the rename chain maps physical file columns to their
-    current LOGICAL names and dropped physicals are invisible (the
-    ``logicalNames`` option). Types map through the shared
-    ``_ddl_of`` (decimal/date/timestamp/array/... — the same
-    coverage as the batch DataSource; a private narrower map here
-    used to reject every decimal-typed table, the r6 judge's #1).
-
-    Fixed-schema assumption (enforced at read time, not here): a
-    streaming source's schema is pinned at start, so commits written
-    under an OLDER schema replay with the newest one — ``read()``
-    null-fills columns a file predates and raises if a file carries
-    columns the pinned schema lacks (a dropped column cannot be
-    replayed into a narrower schema).
-
-    Source preference: the newest data commit's RECORDED schema (the
-    Commit.schema field — no footer read, and it exists even for a
-    zero-file TRUNCATE restate); parquet-footer fallback for legacy
-    logs that predate schema recording."""
-    import pyarrow.parquet as pq
-
-    from lakehouse_test_spark.sources.lakehouse_datasource import _ddl_of
-
-    lop, dropped, wid = (
-        _evolution_of(path) if logical else ({}, set(), {})
-    )
-
-    def _render(pairs) -> str:
-        cols = [
-            f"{lop.get(name, name)} {wid.get(name, ddl)}"
-            for name, ddl in pairs
-            if not (logical and name in dropped)
-        ]
-        cols.append("_change_type string")
-        cols.append("_commit_version int")
-        cols.append("_commit_timestamp timestamp")
-        return ", ".join(cols)
-
-    log = sorted((path / "_log").glob("*.json"), reverse=True)
-    for entry in log:
-        d = json.loads(entry.read_text())
-        if d.get("schema") and (d.get("files") or d.get("restate")):
-            return _render(d["schema"].items())
-        if d.get("files"):
-            sch = pq.read_schema(str(path / d["files"][0]))
-            return _render((f.name, _ddl_of(f.type)) for f in sch)
-    raise ValueError(f"no data commits under {path}")
 
 
 class _FilePartition(InputPartition):
@@ -225,112 +141,6 @@ class _FilePartition(InputPartition):
         # canonical plans.lakehouse.ts_micros conversion) — emitted as
         # the _commit_timestamp meta column; None for legacy commits
         self.ts_us = ts_us
-
-
-def _meta_log_earliest(path: Path) -> int:
-    """Earliest commit version guaranteed present (0 = log never
-    cleaned) — recorded by ``LakehouseTable.clean_log``."""
-    meta = path / "_meta.json"
-    if meta.exists():
-        return int(json.loads(meta.read_text()).get("log_earliest", 0))
-    return 0
-
-
-def resolve_ts_start(path: Path, ts: float, strict: bool = True) -> int:
-    """``startingTimestamp`` → starting offset (version − 1 of the
-    FIRST commit at/after ``ts`` — Delta's rule), shared by the batch
-    and STREAMING readers so the two surfaces resolve identically.
-    Bounded scan: commit timestamps are non-decreasing in version, so
-    the walk reads JSONs newest-first and stops at the first commit
-    below the bound — O(commits after the timestamp) parses, never a
-    full log parse. Legacy ts-None commits are SKIPPED (unknown time
-    excludes them from the feed, matching the old full-scan rule),
-    never treated as epoch-0 — a None mid-walk must not truncate the
-    scan, and a None at the head must not poison the head check.
-
-    Loud edges (never a silently wrong feed): a timestamp past the
-    newest commit RAISES (Delta's behavior — a typo'd future
-    timestamp must not start an empty feed), and a bound at/below the
-    oldest KNOWN-timestamp survivor on a retention-cleaned log RAISES
-    the restart recipe — a reclaimed (or surviving-but-untimestamped)
-    commit may have matched the bound, so resolving to the earliest
-    survivor would silently drop its changes. ``strict=False``
-    (reader CONSTRUCTION: the floor seed) returns the conservative
-    resolution instead of raising on the retention edge — a RESTART
-    never re-reads from the initial offset (the checkpointed
-    ``partitions()`` fast-forwards the floor first), so raising there
-    would brick restarts of caught-up streams; ``initialOffset()``
-    (fresh starts only, by the traced call order) stays strict."""
-    import os
-
-    vs: list[tuple[int, str]] = []
-    try:
-        with os.scandir(path / "_log") as it:
-            for e in it:
-                nm = e.name
-                if nm.endswith(".json"):
-                    try:
-                        vs.append((int(nm[:-5]), e.path))
-                    except ValueError:
-                        continue
-    except FileNotFoundError:
-        pass
-    vs.sort(reverse=True)
-    if not vs:
-        raise ValueError(f"no commits under {path}")
-
-    def ts_of(p: str) -> float | None:
-        return json.loads(Path(p).read_text()).get("ts")
-
-    cand = None
-    newest_known: tuple[int, float] | None = None
-    oldest_known: tuple[int, float] | None = None
-    for v, p in vs:  # newest first
-        tv = ts_of(p)
-        if tv is None:
-            continue  # legacy commit: unknown time, not epoch 0
-        if newest_known is None:
-            newest_known = (v, tv)
-        oldest_known = (v, tv)
-        if tv >= ts:
-            cand = v
-        else:
-            break
-    if newest_known is None:
-        raise ValueError(
-            f"no timestamped commits under {path}: startingTimestamp "
-            "cannot resolve (legacy log) — use startingVersion"
-        )
-    if newest_known[1] < ts:
-        raise ValueError(
-            f"startingTimestamp {ts} is greater than the newest "
-            f"commit's timestamp ({newest_known[1]} at "
-            f"v{newest_known[0]}); use a timestamp at or before the "
-            "head (Delta raises the same way)"
-        )
-    assert cand is not None  # newest_known[1] >= ts guarantees it
-    earliest = _meta_log_earliest(path)
-    if (
-        earliest > 0
-        and oldest_known is not None
-        and cand == oldest_known[0]
-        and ts <= oldest_known[1]
-    ):
-        # the walk never found a survivor BELOW the bound (comparing
-        # against the oldest KNOWN-ts survivor — a ts-None earliest
-        # survivor must not defeat the check), so the TRUE
-        # first-at-or-after may be a reclaimed commit below the
-        # retention cutoff — resolving to the survivor would silently
-        # omit the reclaimed changes from the feed
-        if strict:
-            raise ValueError(
-                f"LogRetentionError: startingTimestamp {ts} is at or "
-                f"before the oldest surviving timestamped commit "
-                f"(v{oldest_known[0]}); clean_log reclaimed the "
-                "commits that may match — start from a snapshot "
-                "(startingMode=snapshot) or a surviving version"
-            )
-    return cand - 1
 
 
 def retention_gap_error(version: int) -> RuntimeError:
@@ -460,9 +270,6 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         self.logical = str(
             options.get("logicalNames") or options.get("logicalnames") or ""
         ).lower() in ("true", "1")
-        self._lop, self._dropped, _ = (
-            _evolution_of(self.path) if self.logical else ({}, set(), {})
-        )
         # seedChunkFiles (r8) was REMOVED in r9: its cursor-form seed
         # offsets were only sound if initialOffset() preceded the
         # first latestOffset() on a fresh start, and the real engine
@@ -589,59 +396,25 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         st["_plan_cache"] = {}
         return st
 
-    def _vacuum_horizon(self) -> int:
-        meta = self.path / "_meta.json"
-        if meta.exists():
-            return json.loads(meta.read_text()).get("vacuum_horizon", 0)
-        return 0
+    def _log(self):
+        """The table's log owner. Built per use (a path and no Spark
+        session), so executors unpickle no table state."""
+        from lakehouse_test_spark.plans.lakehouse import LakehouseTable
+
+        return LakehouseTable(None, str(self.path))
 
     def _require_files(self, version: int, files: list[str]) -> None:
         """Raise the VacuumHorizonError contract (descriptive, driver-
         side) instead of letting executors hit pyarrow FileNotFound."""
         missing = [f for f in files if not Path(f).exists()]
         if missing:
+            horizon = self._log().meta().get("vacuum_horizon", 0)
             raise RuntimeError(
                 f"VacuumHorizonError: commit v{version} references "
                 f"{len(missing)} vacuumed/missing data file(s) "
-                f"(table vacuum horizon is v{self._vacuum_horizon()}); "
+                f"(table vacuum horizon is v{horizon}); "
                 "restart the stream from a fresh snapshot"
             )
-
-    def _commits(self, lo: int | None = None, hi: int | None = None) -> list[dict]:
-        """Commit dicts with ``lo < version <= hi`` — parses ONLY the
-        requested range (a micro-batch's window), never the whole log:
-        on a long-lived table the per-batch planning cost follows the
-        batch, not the commit count (same fix as the writer's
-        checkpointed replay dedup).
-
-        Log retention: versions reclaimed by ``clean_log`` are simply
-        absent here — ``_tail_partitions`` turns each sub-cutoff gap
-        into a partition that raises at READ time (planning must stay
-        quiet: on every restart the engine re-plans the last
-        CHECKPOINTED batch, whose rows were already emitted — a
-        plan-time raise would brick clean restarts of caught-up
-        streams; only a replay that actually re-reads the reclaimed
-        window must fail)."""
-        import os
-
-        rng: list[tuple[int, str]] = []
-        with os.scandir(self.path / "_log") as it:
-            for e in it:
-                nm = e.name
-                if not nm.endswith(".json"):
-                    continue
-                try:
-                    v = int(nm[:-5])
-                except ValueError:
-                    continue
-                if (lo is not None and v <= lo) or (hi is not None and v > hi):
-                    continue
-                rng.append((v, e.path))
-        rng.sort()
-        return [json.loads(Path(p).read_text()) for _v, p in rng]
-
-    def _log_earliest(self) -> int:
-        return _meta_log_earliest(self.path)
 
     def initialOffset(self) -> dict:
         return self._initial_offset()
@@ -687,11 +460,9 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
                 )
             return {"version": -1, "mode": "snapshot"}
         if st is not None:
-            return {
-                "version": resolve_ts_start(
-                    self.path, float(st), strict=strict
-                )
-            }
+            # the offset is the version before the first commit at or
+            # after the bound (Delta's rule)
+            return {"version": self._log().first_version_since(float(st), strict) - 1}
         if sv is None or str(sv).lower() in ("earliest", "-1"):
             # "-1" aliases earliest on the stream surface too, keeping
             # the option coherent with the batch reader's spellings
@@ -707,54 +478,12 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             )
         return {"version": v0 - 1}
 
-    def _log_head(self) -> int:
-        """Newest commit version by directory listing alone (scandir,
-        zero JSON parses) — the batch reader's default endingVersion."""
-        import os
-
-        hi = -1
-        try:
-            with os.scandir(self.path / "_log") as it:
-                for e in it:
-                    nm = e.name
-                    if nm.endswith(".json"):
-                        try:
-                            hi = max(hi, int(nm[:-5]))
-                        except ValueError:
-                            pass
-        except FileNotFoundError:
-            pass
-        return hi
-
     def latestOffset(self) -> dict:
-        # scandir, not glob: runs EVERY trigger; at 10⁵ commits Path
-        # construction dominates the listing itself
-        import os
-
-        hi = -1
-        # the SINGLE per-trigger listing: the head fold always needs
-        # it, and the file-capped walk reuses the same pass for its
-        # window's (version → path) map instead of a second scandir —
-        # the directory listing is the per-trigger cost floor (O(log
-        # size), inherent to polling a file log), so pay it once
-        want_paths = self.max_files > 0 and self._floor_key is not None
-        floor_v = self._floor_key[0] if want_paths else 0
-        paths: dict[int, str] = {}
-        try:
-            with os.scandir(self.path / "_log") as it:
-                for e in it:
-                    nm = e.name
-                    if nm.endswith(".json"):
-                        try:
-                            v = int(nm[:-5])
-                        except ValueError:
-                            continue
-                        if v > hi:
-                            hi = v
-                        if want_paths and v >= floor_v:
-                            paths[v] = e.path
-        except FileNotFoundError:
-            pass
+        # the SINGLE per-trigger listing of the log (O(log size),
+        # inherent to polling a file log); the file-capped walk below
+        # reads the commits it walks by version, with no second listing
+        log = self._log()
+        hi = log.latest_version()
         # tail admission control (maxVersionsPerTrigger): once the
         # floor is known, advance at most N versions per trigger —
         # a stream 10³ commits behind drains as ⌈10³/N⌉ batches
@@ -770,27 +499,26 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         # file-unit admission (maxFilesPerTrigger): walk the frontier
         # commits, spending the budget against each commit's PLANNED
         # partition count; stop mid-commit with a files-form offset
-        # when a commit alone exceeds the remaining budget. Commit
-        # JSONs read lazily in version order — the walk stops after
-        # ~cap units, so per trigger this is the one listing above +
-        # O(commits walked) file reads, never O(backlog) parses
-        # (zero-unit commits like compactions are walked past, but
-        # each is read once and the floor jumps over them after the
-        # batch); plans cache for the partitions() call that follows.
-        if want_paths and hi >= 0:
-            return self._file_capped_offset(hi, paths)
+        # when a commit alone exceeds the remaining budget. The walk
+        # stops after ~cap units, so per trigger this is the one
+        # listing above + O(commits walked) file reads, never
+        # O(backlog) parses (zero-unit commits like compactions are
+        # walked past, but each is read once and the floor jumps over
+        # them after the batch); plans cache for the partitions() call
+        # that follows.
+        if self.max_files > 0 and self._floor_key is not None and hi >= 0:
+            return self._file_capped_offset(hi, log)
         return {"version": hi}
 
-    def _file_capped_offset(self, hi: int, paths: dict[int, str]) -> dict:
+    def _file_capped_offset(self, hi: int, log) -> dict:
         fv, complete, fk = self._floor_key
         v = fv + 1 if complete else fv
         consumed = 0 if complete else fk
         budget = self.max_files
         while v <= hi:
-            c = None
-            if v not in self._plan_cache and v in paths:
-                c = json.loads(Path(paths[v]).read_text())
-            plan = self._planned(v, c) if (v in paths or v in self._plan_cache) else []
+            plan = self._plan_cache.get(v)
+            if plan is None:
+                plan = self._planned(v, log.commit(v))
             avail = len(plan) - consumed
             if avail > budget:
                 # a commit-aligned offset is the canonical form of a
@@ -804,14 +532,14 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             v += 1
         return {"version": hi}
 
-    def _planned(self, v: int, c: dict | None) -> list:
+    def _planned(self, v: int, c) -> list:
         """Planned partitions of commit ``v`` (deterministic across
         reader instances — files-form offsets are replayed by slicing
         this list on a fresh instance after a restart). ``c`` may be
         None for a version gap (no commit file): plans empty."""
         if v in self._plan_cache:
             return self._plan_cache[v]
-        plan = [] if c is None else self._commit_partitions(v, c)
+        plan = [] if c is None else self._commit_partitions(c)
         if len(self._plan_cache) >= 128:
             self._plan_cache.pop(next(iter(self._plan_cache)))
         self._plan_cache[v] = plan
@@ -831,11 +559,9 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
 
         import pyarrow.parquet as pq
 
-        from lakehouse_test_spark.plans.lakehouse import LakehouseTable
-
         if upto < 0:
             return [_FilePartition("insert", "", upto)]
-        snap = LakehouseTable(None, str(self.path)).pin(upto)
+        snap = self._log().pin(upto)
         # base-file match key → [(dv path, [exact recorded refs])] —
         # distinct refs accumulated batch-by-batch (iter_batches), so
         # the driver never materializes the DV's full O(deleted rows)
@@ -914,7 +640,7 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             end.get("files"),
         )
 
-    def _commit_partitions(self, v: int, c: dict) -> list:
+    def _commit_partitions(self, c) -> list:
         """Deterministic planned partitions of ONE commit — the unit
         list files-form offsets index into, so the ORDER must be
         identical across reader instances (restart replays a slice on
@@ -924,19 +650,20 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         compactions plan empty."""
         from lakehouse_test_spark.plans.lakehouse import ts_micros
 
-        if c.get("restate"):
-            if c.get("data_change", True) and not self._skip_restates:
+        v = c.version
+        if c.restate:
+            if c.data_change and not self._skip_restates:
                 raise RuntimeError(
-                    f"commit v{v} ({c['operation']}) is a full rewrite; "
+                    f"commit v{v} ({c.operation}) is a full rewrite; "
                     "CDF stream cannot express it — restart from a snapshot"
                 )
             # compaction: no logical change — or a data-changing
             # rewrite under the plain stream's skipChangeCommits
             # (Delta's flag: emit only appended data, skip rewrites)
             return []
-        tsu = ts_micros(c.get("ts"))
+        tsu = ts_micros(c.ts)
         parts: list[_FilePartition] = []
-        if c.get("dv_files"):
+        if c.dv_files:
             # one partition per (DV file, BASE file): the driver
             # reads only each DV's distinct base-file list
             # (column-projected — planning-sized, never positions)
@@ -947,8 +674,8 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             # the same descriptive contract)
             import pyarrow.parquet as pq
 
-            self._require_files(v, [str(self.path / f) for f in c["dv_files"]])
-            for dvf in c["dv_files"]:
+            self._require_files(v, [str(self.path / f) for f in c.dv_files])
+            for dvf in c.dv_files:
                 dvp = str(self.path / dvf)
                 # distinct accumulated batch-by-batch: the driver
                 # holds only the distinct base-file strings, never
@@ -963,7 +690,7 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
                 if not distinct:  # empty DV: keep the no-op contract
                     parts.append(_FilePartition("dv", dvp, v, ts_us=tsu))
         else:
-            files = [str(self.path / f) for f in c.get("files", [])]
+            files = [str(self.path / f) for f in c.files]
             self._require_files(v, files)
             for f in files:
                 parts.append(_FilePartition("insert", f, v, ts_us=tsu))
@@ -983,7 +710,10 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         any instance."""
         parts: list[InputPartition] = []
         start_v = lo if lo_files is not None else lo + 1
-        commits = {c["version"]: c for c in self._commits(start_v - 1, hi)}
+        log = self._log()
+        # parses ONLY the window's commits: per-batch planning cost
+        # follows the batch, not the log
+        commits = {c.version: c for c in log.commits(start_v - 1, hi)}
         # log-retention guard, at READ granularity: a version whose
         # JSON clean_log reclaimed plans a POISONED partition that
         # raises when (and only when) its rows would actually be
@@ -992,7 +722,7 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         # restarts (the engine re-plans the last committed batch,
         # which is never re-read, before the first latestOffset)
         earliest = (
-            self._log_earliest()
+            log.log_earliest()
             if any(v not in commits for v in range(start_v, hi + 1))
             else 0
         )
@@ -1076,19 +806,20 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
 
         t = pq.read_table(path)
-        if self._dropped:
-            # dropped physicals are invisible in logical mode — BEFORE
-            # the rename walk, or a pre-drop file's dead physical would
-            # surface under a re-added column's logical name
-            keep = [n for n in t.column_names if n not in self._dropped]
+        if self.logical:
+            # every vintage's physical columns surface under their
+            # CURRENT logical names, read per replayed file: Spark
+            # builds this reader once per query run, and a rename that
+            # lands mid-stream must fail the next read against the
+            # pinned schema, not wait for a restart
+            m = self._log().column_mapping()
+            # dropped physicals are invisible — BEFORE the rename, or a
+            # pre-drop file's dead physical would surface under a
+            # re-added column's logical name
+            keep = [n for n in t.column_names if n not in m.dropped]
             if len(keep) != len(t.column_names):
                 t = t.select(keep)
-        if self._lop:
-            # logicalNames: every vintage's physical columns surface
-            # under their current logical identity
-            t = t.rename_columns(
-                [self._lop.get(n, n) for n in t.column_names]
-            )
+            t = t.rename_columns([m.logical.get(n, n) for n in t.column_names])
         if positions is not None:
             t = t.take(pa.array(positions, pa.int64()))
         if self.data_columns is not None:
@@ -1253,66 +984,17 @@ class LakehouseCDFBatchReader(DataSourceReader):
                 "startingVersion (and bounds it with endingVersion)"
             )
 
-    def _resolve_ts_bounds(
-        self, since: int, upto: int | None
-    ) -> tuple[int, int | None]:
-        """Timestamp → version resolution with a BOUNDED scan: commit
-        timestamps are non-decreasing in version (wall-clock at
-        publish), so walking the log NEWEST-FIRST stops at the first
-        commit below the bound — O(commits after the timestamp) JSON
-        parses, never a full-log parse (the r9 version resolved both
-        bounds via ``_commits()`` over the whole history).
-        ``startingTimestamp`` past the newest commit RAISES, mirroring
-        Delta's readChangeFeed (and the existing ``endingTimestamp``
-        check) — a typo'd future timestamp must not silently return an
-        empty feed. The starting side is the shared
-        :func:`resolve_ts_start` (the STREAM reader resolves its
-        ``startingTimestamp`` through the same function, so the two
-        surfaces cannot disagree)."""
-        import os
-
-        if self._since_ts is not None:
-            since = resolve_ts_start(self._r.path, self._since_ts)
-        if self._upto_ts is not None:
-            vs: list[tuple[int, str]] = []
-            with os.scandir(self._r.path / "_log") as it:
-                for e in it:
-                    nm = e.name
-                    if nm.endswith(".json"):
-                        try:
-                            vs.append((int(nm[:-5]), e.path))
-                        except ValueError:
-                            continue
-            vs.sort(reverse=True)
-            if not vs:
-                raise ValueError(f"no commits under {self._r.path}")
-            # newest commit at/before the end bound; legacy ts-None
-            # commits are SKIPPED as unknown-time (mirroring
-            # resolve_ts_start) — treating them as epoch 0 would let
-            # an untimestamped commit that POSTDATES the bound match
-            # and stop the newest-first walk early
-            found = None
-            for v, p in vs:
-                ts = json.loads(Path(p).read_text()).get("ts")
-                if ts is None:
-                    continue
-                if ts <= self._upto_ts:
-                    found = v
-                    break
-            if found is None:
-                raise ValueError(
-                    f"endingTimestamp {self._upto_ts} predates the "
-                    "table's first commit"
-                )
-            upto = found
-        return since, upto
-
     def partitions(self) -> Sequence[InputPartition]:
+        # timestamp bounds resolve against the commits' recorded ts
+        # through the log owner, exactly as the stream reader does
+        log = self._r._log()
         since, upto = self.since, self.upto
-        if self._since_ts is not None or self._upto_ts is not None:
-            since, upto = self._resolve_ts_bounds(since, upto)
+        if self._since_ts is not None:
+            since = log.first_version_since(self._since_ts) - 1
+        if self._upto_ts is not None:
+            upto = log.version_at_timestamp(self._upto_ts)
         if upto is None:
-            upto = self._r._log_head()  # scandir max, no JSON parses
+            upto = log.latest_version()
         if self.initial_load:
             return list(self._r._snapshot_partitions(upto))
         if upto <= since:
@@ -1333,6 +1015,17 @@ class LakehouseCDFDataSource(DataSource):
         return "lakehouse_cdf"
 
     def schema(self) -> str:
+        """The feed's schema: the data columns of the newest data
+        commit's recorded schema, then ``_change_type``,
+        ``_commit_version`` and ``_commit_timestamp``. With
+        ``logicalNames`` the columns take their current LOGICAL names,
+        dropped physicals are invisible and widened columns surface at
+        their target type.
+
+        A streaming source's schema is fixed at start, so commits
+        written under an OLDER schema replay with the newest one:
+        ``read()`` null-fills columns a file predates and raises if a
+        file carries columns the pinned schema lacks."""
         _reject_ref_path(self.options["path"])  # fail at load(), loud
         for k in self.options:
             if k.lower() in ("skipchangecommits", "skiprestates"):
@@ -1347,7 +1040,33 @@ class LakehouseCDFDataSource(DataSource):
             or self.options.get("logicalnames")
             or ""
         ).lower() in ("true", "1")
-        return _ddl_for_table(Path(self.options["path"]), logical)
+        from lakehouse_test_spark.plans.lakehouse import LakehouseTable
+
+        log = LakehouseTable(None, self.options["path"])
+        snap = log.pin()
+        # the newest data commit is always in the live chain (every
+        # commit after the latest restate is), and its recorded schema
+        # types the stream; a legacy commit that records none falls
+        # back to the snapshot's folded schema
+        newest = next(
+            (c for c in reversed(snap.commits) if c.files or c.restate), None
+        )
+        if newest is None:
+            raise ValueError(f"no data commits under {log.path}")
+        lop, dropped, wid = {}, set(), {}
+        if logical:
+            lop, _phys, dropped, wid = log.column_mapping(snap.meta)
+        cols = [
+            f"{lop.get(name, name)} {wid.get(name, ddl)}"
+            for name, ddl in (newest.schema or snap.schema).items()
+            if name not in dropped
+        ]
+        cols += [
+            "_change_type string",
+            "_commit_version int",
+            "_commit_timestamp timestamp",
+        ]
+        return ", ".join(cols)
 
     def _data_shape(self, schema):
         data = [

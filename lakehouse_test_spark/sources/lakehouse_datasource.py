@@ -125,37 +125,6 @@ def _split_top(s: str) -> list[str]:
     return out + [cur]
 
 
-_PA_TO_DDL = {
-    "int64": "bigint",
-    "int32": "int",
-    "int16": "smallint",
-    "int8": "tinyint",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-    "binary": "binary",
-    "large_binary": "binary",
-    "date32[day]": "date",
-}
-
-
-def _ddl_of(pa_type) -> str:
-    t = str(pa_type)
-    if t in _PA_TO_DDL:
-        return _PA_TO_DDL[t]
-    if t.startswith("timestamp"):
-        return "timestamp"
-    if t.startswith("decimal128(") or t.startswith("decimal("):
-        return "decimal" + t[t.index("(") :]
-    if t.startswith("list<") or t.startswith("large_list<"):
-        import pyarrow as pa
-
-        return f"array<{_ddl_of(pa_type.value_type)}>"
-    raise ValueError(f"unsupported lakehouse column type {t}")
-
-
 def _arrow_of_ddl(ddl: str):
     """Spark DDL (as commits record it) → Arrow type."""
     import pyarrow as pa
@@ -212,19 +181,11 @@ class _SnapshotState:
             raise ValueError(f"no data at requested ref of {self.root}")
         self.files = [_abs_file(self.root, f) for _c, f in snap.files]
         self.stats = [snap.file_stats(c, f, blooms=True) for c, f in snap.files]
-        # dropped physicals stay invisible (column-mapping DROP)
-        self._dropped = {
-            d["physical"] for d in snap.meta.get("dropped_columns", [])
-        }
-        # physical → logical rename chain (column mapping)
-        log_of_phys: dict[str, str] = {}
-        for old, new in snap.meta.get("column_renames", []):
-            # walk: anything currently mapping TO old now maps to new
-            for k, v in list(log_of_phys.items()):
-                if v == old:
-                    log_of_phys[k] = new
-            log_of_phys.setdefault(old, new)
-        self.logical_of_physical = log_of_phys
+        # physical → logical names (column mapping); dropped
+        # physicals stay invisible
+        mapping = t.column_mapping(snap.meta)
+        self._dropped = mapping.dropped
+        log_of_phys = self.logical_of_physical = mapping.logical
         self.stat_keys = {  # logical col -> every vintage stats key
             c: sorted(t._stat_keys(c, snap.meta))
             for c in {*log_of_phys.values()}
@@ -433,7 +394,7 @@ class _WriterState:
             # under the dropped physical would be silent data loss
             # (every reader projects dropped physicals away)
             t._mint_readd_physicals([f.name for f in schema.fields])
-        meta = t._read_meta()
+        meta = t.meta()
         # features whose write-side invariants the Python DataSource
         # cannot enforce executor-side — refuse loudly, never corrupt
         blockers = [
@@ -454,9 +415,10 @@ class _WriterState:
         self.overwrite = overwrite
         self.commit_dir_rel = f"data/{_uuid.uuid4().hex[:12]}"
         Path(self.root, self.commit_dir_rel).mkdir(parents=True, exist_ok=True)
-        self.phys_of_logical = t._physical_of_logical()
-        self.widenings = meta.get("widenings") or {}
-        self.dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
+        mapping = t.column_mapping(meta)
+        self.phys_of_logical = mapping.physical
+        self.widenings = mapping.widenings
+        self.dropped = mapping.dropped
         # write-time schema enforcement, DRIVER-side at plan time: a
         # type-conflicting append must fail before any executor writes
         # a byte (the same guard LakehouseTable.append applies).
@@ -653,7 +615,7 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
         # replay dedup via the checkpointed txn high-water (batch ids
         # are monotonic per query — Delta's txn-action check): O(tail
         # since last checkpoint), NOT a full history scan per batch
-        if batchId <= t._stream_batch_high(self.txn_app):
+        if batchId <= t.stream_batch_high(self.txn_app):
             self.state.discard(messages)  # replayed batch: already in
             return
         # the txn marker is an EXPLICIT commit field (Delta's
@@ -731,15 +693,9 @@ class LakehouseStreamReader(DataSourceStreamReader):
         if self.skip_change_commits:
             self._cdf._skip_restates = True
         path, _ = _parse_ref(options["path"])
-        t = _table(path)
-        meta = t._read_meta()
-        self._logical_of_physical = {}
-        for old, new in meta.get("column_renames", []):
-            for k, v in list(self._logical_of_physical.items()):
-                if v == old:
-                    self._logical_of_physical[k] = new
-            self._logical_of_physical.setdefault(old, new)
-        self._dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
+        mapping = _table(path).column_mapping()
+        self._logical_of_physical = mapping.logical
+        self._dropped = mapping.dropped
         self.data_columns = data_columns
         self.data_types = data_types or {}
         self.ignore_deletes = str(

@@ -33,6 +33,12 @@ from lakehouse_test_spark.plans.lakehouse import LakehouseTable, ts_micros
 BASE_TS = 1_700_000_000  # epoch seconds; commit v gets BASE_TS + 3600*v
 
 
+def resolve_ts_start(path, ts: float) -> int:
+    """The stream offset ``startingTimestamp=ts`` resolves to: the
+    version before the first commit at or after ``ts``."""
+    return LakehouseTable(None, str(path)).first_version_since(ts) - 1
+
+
 def _pin_commit_ts(table: LakehouseTable, drop_for: set[int] = frozenset()):
     """Rewrite each commit JSON's recorded ts to BASE_TS + 3600*v
     (or REMOVE it for versions in ``drop_for`` — the legacy vintage)."""
@@ -308,7 +314,6 @@ def test_resolve_ts_start_none_ts_and_retention_edges(spark, tmp_path):
     earliest surviving commit's ts on a retention-cleaned log raises
     instead of silently omitting reclaimed changes."""
     from lakehouse_test_spark.plans.lakehouse import LakehouseTable
-    from lakehouse_test_spark.sources.cdf_datasource import resolve_ts_start
 
     t = LakehouseTable(spark, str(tmp_path / "rts"))
     for i in range(3):
@@ -375,7 +380,6 @@ def test_ending_timestamp_skips_none_ts_commits(spark, tmp_path):
 
 def test_all_none_ts_log_raises_for_timestamp_start(spark, tmp_path):
     from lakehouse_test_spark.plans.lakehouse import LakehouseTable
-    from lakehouse_test_spark.sources.cdf_datasource import resolve_ts_start
 
     t = LakehouseTable(spark, str(tmp_path / "allnone"))
     t.append(spark.range(2).select(F.col("id").alias("k")).coalesce(1))

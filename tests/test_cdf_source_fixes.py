@@ -156,9 +156,12 @@ def test_cdf_schema_prefers_recorded_schema_and_survives_truncate(spark, tmp_pat
     from unittest import mock
 
     from lakehouse_test_spark.sources.cdf_datasource import (
+        LakehouseCDFDataSource,
         LakehouseCDFStreamReader,
-        _ddl_for_table,
     )
+
+    def _ddl_for_table(path):
+        return LakehouseCDFDataSource({"path": str(path)}).schema()
 
     t = LakehouseTable(spark, str(tmp_path / "trunc"))
     t.append(

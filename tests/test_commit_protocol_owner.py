@@ -1,5 +1,5 @@
-"""Tooling guard: ``plans/lakehouse.py`` owns the commit protocol and
-the read path.
+"""Tooling guard: ``plans/lakehouse.py`` owns the commit protocol, the
+read path and the on-disk log.
 
 Every other module commits through ``LakehouseTable``'s shared commit
 step. None may describe files itself (import the footer helpers
@@ -9,7 +9,10 @@ again: lost zone maps, skipped checkpoints, a different rebase rule.
 Likewise every other module reads through ``LakehouseTable.pin`` and
 its ``Snapshot``; none may work out the live set, the DVs or the
 schema from the log itself (the ``READ_PRIVATES`` below), or the
-readers disagree again about what is live.
+readers disagree again about what is live. And none may list ``_log/``,
+read ``_meta.json`` or parse commits itself (the ``LOG_PRIVATES`` and
+``LOG_NAMES`` below): the change feed's own log reader once read a
+legacy compaction as an insert of every compacted row.
 Test seams such as ``_pre_publish_hook`` stay allowed."""
 from __future__ import annotations
 
@@ -30,6 +33,19 @@ READ_PRIVATES = {
     "_unified_live_schema",
     "_ckpt_blooms",
 }
+LOG_PRIVATES = {
+    "_read_meta",
+    "_commits_between",
+    "_check_log_window",
+    "_physical_of_logical",
+    "_read_checkpoint",
+    "_stream_batch_high",
+    "_commit_of",
+    "_log_earliest",
+}
+#: on-disk names only the owner opens (``_delta_log`` is the Delta
+#: export's own directory, a different literal)
+LOG_NAMES = {"_log", "_meta.json"}
 
 
 def _violations(path: Path) -> list[str]:
@@ -41,8 +57,12 @@ def _violations(path: Path) -> list[str]:
                 for a in node.names
                 if a.name in PRIVATE_HELPERS
             ]
-        elif isinstance(node, ast.Attribute) and node.attr in PRIVATE_HELPERS | READ_PRIVATES:
+        elif isinstance(node, ast.Attribute) and node.attr in (
+            PRIVATE_HELPERS | READ_PRIVATES | LOG_PRIVATES
+        ):
             out.append(f"{path.name}:{node.lineno} uses {node.attr}")
+        elif isinstance(node, ast.Constant) and node.value in LOG_NAMES:
+            out.append(f"{path.name}:{node.lineno} names {node.value}")
         elif isinstance(node, ast.Call):
             f = node.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
@@ -59,7 +79,7 @@ def test_only_the_lakehouse_module_commits():
         for v in _violations(p)
     ]
     assert not found, (
-        "commit protocol or read path used outside plans/lakehouse.py: "
+        "commit protocol, read path or log used outside plans/lakehouse.py: "
         + "; ".join(found)
     )
 
@@ -93,3 +113,50 @@ def test_guard_sees_a_hand_rolled_read(tmp_path):
         "uses _live_dv_files",
         "uses _ckpt_blooms",
     ]
+
+
+def test_guard_sees_a_hand_rolled_log_reader(tmp_path):
+    """The scan catches the shapes the old change-feed reader used to
+    read the log without the owner."""
+    p = tmp_path / "feed.py"
+    p.write_text(
+        "import os\n"
+        "def head(t, path):\n"
+        "    with os.scandir(path / '_log') as it:\n"
+        "        names = [e.name for e in it]\n"
+        "    return names, t._read_meta()\n"
+    )
+    assert sorted(v.split(" ", 1)[1] for v in _violations(p)) == [
+        "names _log",
+        "uses _read_meta",
+    ]
+
+
+def test_cdf_tail_skips_a_legacy_compaction(tmp_path):
+    """A compact commit written before the ``restate`` flag existed
+    changes no rows: the change feed plans nothing for it (it used to
+    replay every compacted row as a fresh insert)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakehouse_test_spark.plans.lakehouse import LakehouseTable
+    from lakehouse_test_spark.sources.cdf_datasource import LakehouseCDFStreamReader
+
+    t = LakehouseTable(None, str(tmp_path / "t"))
+    for i, op, extra in (
+        (0, "append", {}),
+        (1, "append", {}),
+        (2, "compact", {"restate": True, "data_change": False}),
+    ):
+        d = t.path / "data" / f"c{i}"
+        d.mkdir(parents=True)
+        pq.write_table(pa.table({"k": [3 * i, 3 * i + 1, 3 * i + 2]}), d / "part-0.parquet")
+        t._commit_files([f"data/c{i}/part-0.parquet"], op, schema={"k": "bigint"}, **extra)
+    v2 = t.log_dir / f"{2:020d}.json"
+    legacy = json.loads(v2.read_text())
+    del legacy["restate"], legacy["data_change"]
+    v2.write_text(json.dumps(legacy))
+    parts = LakehouseCDFStreamReader({"path": str(t.path)}, None)._tail_partitions(-1, 2)
+    assert sorted(p.version for p in parts) == [0, 1]

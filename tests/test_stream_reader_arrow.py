@@ -260,8 +260,8 @@ def test_cdf_stream_reader_yields_recordbatches_and_range_parse(spark, tmp_path)
         {"k": "bigint", "v": "double", "note": "string"},
     )
     # range-bounded log parse: only the requested window is read
-    assert [c["version"] for c in r._commits(0, 1)] == [1]
-    assert [c["version"] for c in r._commits(-1, 1)] == [0, 1]
+    assert [c.version for c in t.commits(0, 1)] == [1]
+    assert [c.version for c in t.commits(-1, 1)] == [0, 1]
     parts = r.partitions({"version": -1}, {"version": 1})
     rows = 0
     for p in parts:

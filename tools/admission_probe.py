@@ -105,6 +105,7 @@ def listing_floor_phase(ns: list[int], keep: int) -> list[dict]:
         print(json.dumps(row), flush=True)
         return row
 
+    t.log_dir.mkdir(parents=True)  # the probe hand-writes commit JSONs
     for n in sorted(ns):
         for v in range(built, n):
             (t.log_dir / f"{v:020d}.json").write_text(

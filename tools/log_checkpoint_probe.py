@@ -43,6 +43,7 @@ def forge(
         "k": 6,
         "b64": base64.b64encode(bytes(1024)).decode(),
     }
+    t.log_dir.mkdir(parents=True, exist_ok=True)  # commits are hand-written
     for v in range(n):
         restate = v > 0 and v % 500 == 0
         f = f"data/x/{uuid.uuid4().hex}.parquet"
