@@ -48,7 +48,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_test_spark.plans.lakehouse import LakehouseTable, txn_marker
+from lakehouse_test_spark.plans.lakehouse import LakehouseTable, evolution_record, txn_marker
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 #: column mapping requires reader 2 / writer 5 (PROTOCOL.md §Column Mapping)
@@ -429,9 +429,7 @@ def _export_fingerprint(
 
     basis = json.dumps(
         {
-            "renames": tmeta.get("column_renames", []),
-            "dropped": tmeta.get("dropped_columns", []),
-            "widenings": tmeta.get("widenings") or {},
+            **evolution_record(tmeta),
             "constraints": constraints,
             "generated": generated,
             "identity": identity,
@@ -541,16 +539,17 @@ def export_delta_log(
         )
     log_dir = table.path / "_delta_log"
 
-    phys_map = table.column_mapping().physical  # logical → stable physical
     tmeta = table.meta()
+    cm = table.column_mapping(tmeta)
+    phys_map = cm.physical  # logical → stable physical
     constraints = dict(tmeta.get("constraints", {}))
     generated = table.generated_columns()
     identity = table.identity_columns()
-    widenings = tmeta.get("widenings") or {}
+    widenings = cm.widenings
     # Delta's rule: DROP COLUMN (like rename) requires column mapping —
     # the schemaString simply omits the field while its physical data
     # stays in place, invisible to physicalName-driven readers
-    needs_mapping = bool(phys_map) or bool(tmeta.get("dropped_columns"))
+    needs_mapping = bool(phys_map) or bool(cm.dropped)
     fingerprint = _export_fingerprint(tmeta, generated, identity, constraints)
 
     resume: tuple[int, str] | None = None
@@ -653,9 +652,6 @@ def export_delta_log(
     # schemas fold the same surface from already-parsed log JSON;
     # footers remain only for legacy commits lacking one (fold_broken
     # flips once and the footer path takes over for the rest).
-    meta0 = table.meta()
-    dropped0 = {d["physical"] for d in meta0.get("dropped_columns", [])}
-    wid0 = meta0.get("widenings") or {}
     fields_live: dict[str, str] = {}  # physical → recorded ddl fold
 
     def _fold_tail_commit(c) -> bool:
@@ -680,7 +676,7 @@ def export_delta_log(
         if key in _render_cache:
             return _render_cache[key]
         try:
-            u = table._fold_schemas([("live", dict(fields_live))], dropped0, wid0)
+            u = table._fold_schemas([("live", dict(fields_live))], cm.dropped, widenings)
             if not u:
                 out = None
             else:

@@ -52,7 +52,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_test_spark.plans.lakehouse import LakehouseTable
+from lakehouse_test_spark.plans.lakehouse import LakehouseTable, evolution_record
 from lakehouse_test_spark.sources.avro_codec import _zigzag_decode, _zigzag_encode
 
 # ---------------------------------------------------------------------------
@@ -450,16 +450,14 @@ def _schema_history(
     meta = table.meta()
     if head is None:
         head = commits[-1].version
-    renames = meta.get("column_renames", [])
-    stamps = list(meta.get("rename_versions") or [])
-    stamps += [-1] * (len(renames) - len(stamps))
-    wid = meta.get("widenings") or {}
+    cm = table.column_mapping(meta)
+    wid = cm.widenings
     wid_vs = meta.get("widening_versions") or {}
-    dropped_phys = {d["physical"] for d in meta.get("dropped_columns", [])}
+    dropped_phys = cm.dropped
 
     # stable field-id per PHYSICAL column (current assignment first —
     # manifests/bounds key on these ids)
-    phys_map = table.column_mapping().physical
+    phys_map = cm.physical
     if seed is not None:
         id_of_phys = {k: int(v) for k, v in seed["id_of_phys"].items()}
         # the exported name mapping keys on ice_schema's ids, so a
@@ -491,15 +489,9 @@ def _schema_history(
         return version > min(int(stamp), head - 1)
 
     def _names_at(version: int) -> dict[str, str]:
-        m: dict[str, str] = {}
-        for (old, new), sv in zip(renames, stamps):
-            if not _applies(sv, version):
-                continue
-            for k, v in list(m.items()):
-                if v == old:
-                    m[k] = new
-            m.setdefault(old, new)
-        return m
+        # the head snapshot takes every rename; a past one those
+        # stamped below it (the same clamp as _applies)
+        return table.column_mapping(meta, None if version >= head else version).logical
 
     if seed is not None:
         fields_phys = dict(seed["fields_phys"])
@@ -749,14 +741,7 @@ def _ice_export_fingerprint(tmeta: dict) -> str:
     new metadata objects)."""
     import hashlib
 
-    basis = json.dumps(
-        {
-            "renames": tmeta.get("column_renames", []),
-            "dropped": tmeta.get("dropped_columns", []),
-            "widenings": tmeta.get("widenings") or {},
-        },
-        sort_keys=True,
-    )
+    basis = json.dumps(evolution_record(tmeta), sort_keys=True)
     return hashlib.md5(basis.encode()).hexdigest()
 
 
@@ -1525,19 +1510,8 @@ def export_iceberg_metadata(
             # field-ids, so without this marker a dropped-then-readded
             # name would be ambiguous under name mapping alone
             **(
-                {
-                    "lakehouse.dropped-physical-names": json.dumps(
-                        sorted(
-                            {
-                                d["physical"]
-                                for d in table.meta().get(
-                                    "dropped_columns", []
-                                )
-                            }
-                        )
-                    )
-                }
-                if table.meta().get("dropped_columns")
+                {"lakehouse.dropped-physical-names": json.dumps(sorted(dropped))}
+                if (dropped := table.column_mapping().dropped)
                 else {}
             ),
         },

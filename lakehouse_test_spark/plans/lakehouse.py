@@ -141,6 +141,9 @@ class Snapshot:
     #: loads the pinned checkpoint's side-car bloom descriptors —
     #: lazily, only point lookups and self-contained copies need them
     blooms: Callable[[], dict] = dataclasses_field(default=dict, repr=False, compare=False)
+    #: the checkpoint version the live chain was planned from (None:
+    #: replayed from the commit JSONs alone)
+    checkpoint_version: int | None = None
 
     @property
     def dv_rows(self) -> int:
@@ -200,19 +203,15 @@ class ColumnMapping(NamedTuple):
     widenings: dict[str, str]
 
 
-def _column_mapping(meta: dict) -> ColumnMapping:
-    logical: dict[str, str] = {}
-    physical: dict[str, str] = {}
-    for old, new in meta.get("column_renames", []):
-        for k, v in list(logical.items()):
-            if v == old:
-                logical[k] = new
-        logical.setdefault(old, new)
-        physical[new] = physical.pop(old, old)
-    dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
-    for phys in dropped:
-        logical.pop(phys, None)
-    return ColumnMapping(logical, physical, dropped, dict(meta.get("widenings") or {}))
+def evolution_record(meta: dict) -> dict:
+    """``_meta.json``'s schema-evolution entries as written — renames,
+    drops and widenings: what an export digests to notice any ALTER
+    that rewrites its history."""
+    return {
+        "renames": meta.get("column_renames", []),
+        "dropped": meta.get("dropped_columns", []),
+        "widenings": meta.get("widenings") or {},
+    }
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -453,7 +452,7 @@ class LakehouseTable:
         version is set by the publisher."""
         zone: dict = {}
         if stats_cols:
-            phys = self._physical_of_logical()
+            phys = self.column_mapping().physical
             pcols = [phys.get(c, c) for c in stats_cols]
             for f in files:
                 raw = _file_stats(self.path / f, pcols)
@@ -843,8 +842,6 @@ class LakehouseTable:
                 high = max(high, t[1])
         return high
 
-    _stream_batch_high = stream_batch_high  # the older name, still called by tests and tools
-
     def latest_version(self) -> int:
         """The offload-watermark analog (§2a op 29): everything at or
         below this version is durable and readable (-1: no commits).
@@ -954,7 +951,7 @@ class LakehouseTable:
         rebase (Delta's delete/merge-vs-anything conflict rule)."""
         self._validate_constraints(df)
         commit_dir = self.path / "data" / f"{operation}-{uuid.uuid4().hex[:12]}"
-        phys = self._physical_of_logical()
+        phys = self.column_mapping().physical
         pdf = self._apply_reverse_renames(df)
         # restates define the new base schema — recording it keeps the
         # post-restate append guard on the O(log JSON) path (no footer
@@ -1256,7 +1253,7 @@ class LakehouseTable:
         commit_dir = self.path / "data" / f"{uuid.uuid4().hex[:12]}"
         combined.repartition(1).write.mode("errorifexists").parquet(str(commit_dir))
         files = self._written(commit_dir)
-        phys = self._physical_of_logical()
+        phys = self.column_mapping().physical
         bloom_cols = [
             k.split(":", 1)[1] for k in sorted(keys) if k.startswith("__bloom__:")
         ]
@@ -1805,6 +1802,9 @@ class LakehouseTable:
             schema=self._fold(meta, pairs, commits),
             meta=meta,
             blooms=lambda: self._ckpt_blooms(ck),
+            checkpoint_version=(
+                ck["version"] if ck is not None and version >= ck["version"] else None
+            ),
         )
 
     def _read(
@@ -2421,8 +2421,6 @@ class LakehouseTable:
             return json.loads(self._meta_path().read_text())
         return {"constraints": {}, "vacuum_horizon": 0}
 
-    _read_meta = meta  # the older name, still called by tests
-
     def _write_meta(self, meta: dict) -> None:
         self.path.mkdir(parents=True, exist_ok=True)
         tmp = self.path / f".meta-{uuid.uuid4().hex}"
@@ -2825,7 +2823,7 @@ class LakehouseTable:
             cols = self.snapshot().columns
             if name not in cols:
                 raise ValueError(f"drop_column: no column {name!r}; have {cols}")
-        physical = self._physical_of_logical().get(name, name)
+        physical = self.column_mapping(meta).physical.get(name, name)
         meta.setdefault("dropped_columns", []).append(
             {
                 "logical": name,
@@ -2855,7 +2853,7 @@ class LakehouseTable:
             cols = self.snapshot().columns
             if name not in cols:
                 raise ValueError(f"widen_column: no column {name!r}; have {cols}")
-        phys = self._physical_of_logical().get(name, name)
+        phys = self.column_mapping().physical.get(name, name)
         current = self.pin().schema.get(phys) if self.latest_version() >= 0 else None
         meta = self.meta()
         prior = (meta.get("widenings") or {}).get(phys)
@@ -3089,11 +3087,10 @@ class LakehouseTable:
         dropped = meta.get("dropped_columns", [])
         if not dropped:
             return
-        dropped_phys = {d["physical"] for d in dropped}
-        phys_map = self._physical_of_logical()
+        cm = self.column_mapping(meta)
         changed = False
         for c in cols:
-            if phys_map.get(c, c) in dropped_phys:
+            if cm.physical.get(c, c) in cm.dropped:
                 fresh = f"{c}__r{len(meta.get('column_renames', [])) + len(dropped)}"
                 meta.setdefault("column_renames", []).append([fresh, c])
                 changed = True
@@ -3124,14 +3121,36 @@ class LakehouseTable:
                 df = df.withColumnRenamed(old, new)
         return df
 
-    def column_mapping(self, meta: dict | None = None) -> "ColumnMapping":
+    def column_mapping(
+        self, meta: dict | None = None, before: int | None = None
+    ) -> ColumnMapping:
         """The table's column mapping, from ``meta`` (default: read
         ``_meta.json`` now; pass a :class:`Snapshot`'s ``meta`` to map
-        that pinned read) — the one walk of the rename chain."""
-        return _column_mapping(self.meta() if meta is None else meta)
-
-    def _physical_of_logical(self) -> dict[str, str]:
-        return self.column_mapping().physical
+        that pinned read) — the one walk of the rename chain. With
+        ``before``, only the renames stamped below that version apply
+        (the names a past version was written under; renames from
+        before version stamping apply everywhere)."""
+        if meta is None:
+            meta = self.meta()
+        renames = meta.get("column_renames", [])
+        stamps = list(meta.get("rename_versions") or [])
+        stamps += [-1] * (len(renames) - len(stamps))
+        logical: dict[str, str] = {}
+        physical: dict[str, str] = {}
+        for (old, new), stamp in zip(renames, stamps):
+            if before is not None and stamp >= before:
+                continue
+            for k, v in list(logical.items()):
+                if v == old:
+                    logical[k] = new
+            logical.setdefault(old, new)
+            physical[new] = physical.pop(old, old)
+        dropped = {d["physical"] for d in meta.get("dropped_columns", [])}
+        for phys in dropped:
+            logical.pop(phys, None)
+        return ColumnMapping(
+            logical, physical, dropped, dict(meta.get("widenings") or {})
+        )
 
     def _apply_reverse_renames(self, df: DataFrame) -> DataFrame:
         """Map logical→physical names before a data-file write (the
@@ -3140,7 +3159,7 @@ class LakehouseTable:
         mints its fresh physical identity here, and widened columns
         are cast so new files carry the widened type."""
         self._mint_readd_physicals(df.columns)
-        for logical, physical in self._physical_of_logical().items():
+        for logical, physical in self.column_mapping().physical.items():
             if logical in df.columns and physical not in df.columns:
                 df = df.withColumnRenamed(logical, physical)
         return self._apply_widenings_write(df)
@@ -3372,7 +3391,7 @@ class LakehouseTable:
                     continue
                 fstats = (c.stats or {}).get(f) or {}
                 names = set(pq.read_schema(str(p)).names)
-                phys = self._physical_of_logical()
+                phys = self.column_mapping().physical
                 for key in fstats:
                     col = key.split(":", 1)[1] if key.startswith("__bloom__:") else key
                     # stats keys are logical-at-write-time; the file
@@ -3390,7 +3409,7 @@ class LakehouseTable:
             if not p.exists():
                 errors.append(f"missing DV file {dvf}")
         # metadata self-consistency
-        phys = self._physical_of_logical()
+        phys = self.column_mapping().physical
         dropped_pairs = {
             (d["logical"], d["physical"]) for d in meta.get("dropped_columns", [])
         }
@@ -3709,8 +3728,6 @@ class LakehouseTable:
         (0 = never cleaned). Every completeness guard checks this."""
         return int(self.meta().get("log_earliest", 0))
 
-    _log_earliest = log_earliest  # the older name, still called by tests
-
     def check_log_window(self, since_version: int) -> None:
         """Incremental-window completeness: a cursor whose window
         floor predates the earliest surviving commit JSON must raise
@@ -3818,7 +3835,7 @@ class LakehouseTable:
         """{file: {``__bloom__:col``: descriptor}} for freshly written
         ``files`` and logical ``cols`` — the stats a commit records
         so :meth:`scan_point` can skip them."""
-        phys = self._physical_of_logical()  # after minting: re-adds resolve fresh
+        phys = self.column_mapping().physical  # after minting: re-adds resolve fresh
         out: dict = {}
         for bc in cols:
             for f, bl in self._bloom_stats(commit_dir, files, phys.get(bc, bc)).items():

@@ -206,14 +206,18 @@ def lakehouse_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = LakehouseTable(spark, tempfile.mkdtemp(prefix="lh_ckpt_"))
     for b in range(12):
         t.append(c.where(F.col("c_custkey") % 12 == b))
-    # the 10-commit cadence is the only checkpoint 12 appends can write
+    pinned = t.pin()
+    ck = pinned.checkpoint_version
+    assert ck is not None and ck >= 10, "auto-checkpoint missing"
+    fast = [(cm.version, tuple(cm.files)) for cm in pinned.commits]
+    # hide the checkpoint pointer: the same head replays from the JSONs
     ptr = t.log_dir / "_last_checkpoint"
-    assert ptr.exists(), "auto-checkpoint missing"
-    fast = [(cm.version, tuple(cm.files)) for cm in t.pin().commits]
     bak = ptr.read_text()
     ptr.unlink()
-    slow = [(cm.version, tuple(cm.files)) for cm in t.pin().commits]
+    full = t.pin()
     ptr.write_text(bak)
+    assert full.checkpoint_version is None, "full parse still used the checkpoint"
+    slow = [(cm.version, tuple(cm.files)) for cm in full.commits]
     assert fast == slow, "checkpointed plan diverged from full parse"
     snap = t.snapshot()
     out = snap.agg(

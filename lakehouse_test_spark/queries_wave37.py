@@ -167,7 +167,7 @@ def lakehouse_cdf_bounded_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL reconstruction of the first two commits.
 
     Scale: the window parse is O(commits in window) (checkpointed
-    planning below, `_commits_between` above); the load itself is ONE
+    planning below, `commits()` above); the load itself is ONE
     scan of the windowed live set + a broadcast file→version map —
     plan-pinned single FileScan, no per-commit union.
     """

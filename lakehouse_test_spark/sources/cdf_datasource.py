@@ -813,6 +813,18 @@ class LakehouseCDFStreamReader(DataSourceStreamReader):
             # lands mid-stream must fail the next read against the
             # pinned schema, not wait for a restart
             m = self._log().column_mapping()
+            # a pinned column dropped mid-stream would silently read
+            # back as NULLs: fail like a mid-stream rename does
+            gone = [
+                n
+                for n in self.data_columns or []
+                if m.physical.get(n, n) in m.dropped
+            ]
+            if gone:
+                raise RuntimeError(
+                    f"pinned columns {gone} were dropped from the table; "
+                    "restart the stream to pick up the evolved schema"
+                )
             # dropped physicals are invisible — BEFORE the rename, or a
             # pre-drop file's dead physical would surface under a
             # re-added column's logical name

@@ -10,8 +10,8 @@ Likewise every other module reads through ``LakehouseTable.pin`` and
 its ``Snapshot``; none may work out the live set, the DVs or the
 schema from the log itself (the ``READ_PRIVATES`` below), or the
 readers disagree again about what is live. And none may list ``_log/``,
-read ``_meta.json`` or parse commits itself (the ``LOG_PRIVATES`` and
-``LOG_NAMES`` below): the change feed's own log reader once read a
+read ``_meta.json``, walk its rename chain or parse commits itself
+(the ``LOG_PRIVATES`` and ``LOG_NAMES`` below): the change feed's own log reader once read a
 legacy compaction as an insert of every compacted row.
 Test seams such as ``_pre_publish_hook`` stay allowed."""
 from __future__ import annotations
@@ -44,8 +44,9 @@ LOG_PRIVATES = {
     "_log_earliest",
 }
 #: on-disk names only the owner opens (``_delta_log`` is the Delta
-#: export's own directory, a different literal)
-LOG_NAMES = {"_log", "_meta.json"}
+#: export's own directory, a different literal), and the ``_meta.json``
+#: keys of the rename chain and drops only the owner walks
+LOG_NAMES = {"_log", "_meta.json", "column_renames", "dropped_columns"}
 
 
 def _violations(path: Path) -> list[str]:
@@ -125,9 +126,12 @@ def test_guard_sees_a_hand_rolled_log_reader(tmp_path):
         "    with os.scandir(path / '_log') as it:\n"
         "        names = [e.name for e in it]\n"
         "    return names, t._read_meta()\n"
+        "def renames(meta):\n"
+        "    return dict(meta.get('column_renames', []))\n"
     )
     assert sorted(v.split(" ", 1)[1] for v in _violations(p)) == [
         "names _log",
+        "names column_renames",
         "uses _read_meta",
     ]
 

@@ -382,7 +382,7 @@ def test_partition_spec_history_versioned(spark, table):
     table.append(spark.range(5).select(F.col("id").alias("k"), F.lit(0).alias("b")))
     table.set_partition_spec(["b"])
     table.set_partition_spec(["b", "k"])
-    meta_specs = table._read_meta()["partition_specs"]
+    meta_specs = table.meta()["partition_specs"]
     assert [s["spec_id"] for s in meta_specs] == [0, 1]
     assert table.partition_spec() == ["b", "k"]
     with pytest.raises(ValueError):

@@ -180,7 +180,7 @@ def test_wave_ae_lifecycle(spark, tmp_path):
     assert ids1 == list(range(1, 1537))  # incremental rewrite lost nothing
 
     t.rename_column("x", "x_coord")  # follows the clustering spec
-    assert t._read_meta()["clustering"]["cols"] == ["x_coord", "y"]
+    assert t.meta()["clustering"]["cols"] == ["x_coord", "y"]
 
     # merge with schema evolution: updates half the keys, adds a flag
     src = spark.range(0, 1536, 2).select(

@@ -59,21 +59,21 @@ def test_stream_batch_high_water(spark, tmp_path):
     t.append(df, operation="stream-append-b0", txn=("stream-append", 0))
     t.append(df, operation="stream-append-b1", txn=("stream-append", 1))
     t.append(df, operation="stream-append-b4", txn=("stream-append", 4))
-    assert t._stream_batch_high("stream-append") == 4
-    assert t._stream_batch_high("other-prefix") == -1
+    assert t.stream_batch_high("stream-append") == 4
+    assert t.stream_batch_high("other-prefix") == -1
     # the high-water survives (and is served by) a checkpoint
     t.checkpoint()
-    assert t._stream_batch_high("stream-append") == 4
+    assert t.stream_batch_high("stream-append") == 4
     t.append(df, operation="stream-append-b5", txn=("stream-append", 5))
-    assert t._stream_batch_high("stream-append") == 5
+    assert t.stream_batch_high("stream-append") == 5
     # a USER-labeled commit that merely looks like a micro-batch stamp
     # must not advance any high-water (the r6-ADVICE data-loss case:
     # 'load-b7' misread as batch 7 of app 'load' would silently drop a
     # resuming stream's first 8 batches)
     t.append(df, operation="load-b7")
-    assert t._stream_batch_high("load") == -1
+    assert t.stream_batch_high("load") == -1
     t.checkpoint()
-    assert t._stream_batch_high("load") == -1
+    assert t.stream_batch_high("load") == -1
 
 
 def test_checkpoint_incremental_matches_full(spark, tmp_path):

@@ -160,7 +160,7 @@ def test_lagging_stream_raises_not_skips(spark, tmp_path):
         t.append(spark.range(100 + i, 101 + i).select(F.col("id").alias("k")))
     t.checkpoint()
     t.clean_log(keep_versions=2)
-    assert t._log_earliest() >= 19
+    assert t.log_earliest() >= 19
     with pytest.raises(Exception, match="LogRetention|fresh snapshot"):
         run_once()
 
@@ -186,7 +186,7 @@ def test_full_export_raises_incremental_unaffected(spark, tmp_path):
 def test_delta_export_lagging_resume_raises(spark, tmp_path):
     """r10 ADVICE (high): an incremental Delta export whose exported
     head lags BELOW the clean_log cutoff must raise the recipe —
-    _commits_between would otherwise silently omit the reclaimed
+    commits() would otherwise silently omit the reclaimed
     commits and the export would be silently incomplete. (The
     companion test above pins that a CURRENT resume is unaffected.)"""
     from lakehouse_test_spark.plans.delta_export import export_delta_log
@@ -197,7 +197,7 @@ def test_delta_export_lagging_resume_raises(spark, tmp_path):
         t.append(spark.range(800 + i, 801 + i).select(F.col("id").alias("k")))
     t.checkpoint()
     t.clean_log(keep_versions=2)  # earliest ≥ 21 ≫ exported head 2
-    assert t._log_earliest() > 3
+    assert t.log_earliest() > 3
     with pytest.raises(LogRetentionError, match="fresh snapshot"):
         export_delta_log(spark, t)
 
@@ -216,7 +216,7 @@ def test_iceberg_export_lagging_resume_raises(spark, tmp_path):
         t.append(spark.range(800 + i, 801 + i).select(F.col("id").alias("k")))
     t.checkpoint()
     t.clean_log(keep_versions=2)
-    assert t._log_earliest() > 3
+    assert t.log_earliest() > 3
     with pytest.raises(LogRetentionError, match="fresh snapshot"):
         export_iceberg_metadata(spark, t)
 
@@ -230,10 +230,10 @@ def test_legacy_txn_migration_raises_on_cleaned_log(spark, tmp_path):
     O(tail) and keeps working."""
     t = _mk(spark, tmp_path / "legtxn", n=12)
     t.clean_log(keep_versions=3)
-    assert t._stream_batch_high("sinkA") == -1  # default path: fine
+    assert t.stream_batch_high("sinkA") == -1  # default path: fine
     tc = LakehouseTable(spark, str(t.path), legacy_txn_compat=True)
     with pytest.raises(LogRetentionError, match="full commit history"):
-        tc._stream_batch_high("sinkA")
+        tc.stream_batch_high("sinkA")
 
 
 def test_post_clean_maintenance_still_works(spark, tmp_path):
@@ -273,7 +273,7 @@ def test_auto_log_retention_property(spark, tmp_path):
         )
     # cadence checkpoints at v10 and v20 each cleaned below
     # min(ckpt, head-3+1): after v20's checkpoint cutoff = 18
-    assert t._log_earliest() >= 18
+    assert t.log_earliest() >= 18
     assert len(_log_versions(t)) <= 25 - 18 + 1
     assert t.snapshot().count() == 50  # head read intact
     with pytest.raises(LogRetentionError):
@@ -319,7 +319,7 @@ def test_auto_retention_hook_never_gates_commits(spark, tmp_path):
         t.append(spark.range(200 + i, 201 + i).select(F.col("id").alias("k")))
     assert t.latest_version() == 20
     assert t.snapshot().count() == 21
-    assert t._log_earliest() == 0  # retention never fired, never raised
+    assert t.log_earliest() == 0  # retention never fired, never raised
 
 
 def test_cli_alter_log_retention(spark, tmp_path, capsys):
@@ -331,9 +331,9 @@ def test_cli_alter_log_retention(spark, tmp_path, capsys):
     )
     assert rc in (0, None)
     assert "keep 5 versions" in capsys.readouterr().out
-    assert t._read_meta()["log_retention_versions"] == 5
+    assert t.meta()["log_retention_versions"] == 5
     main(["alter", "--table", str(t.path), "--log-retention", "0"], spark=spark)
-    assert "log_retention_versions" not in t._read_meta()
+    assert "log_retention_versions" not in t.meta()
 
 
 def test_partial_rewrite_conflict_classification_on_cleaned_log(spark, tmp_path):
@@ -379,7 +379,7 @@ def test_clean_log_records_earliest_before_deleting(spark, tmp_path):
             t.clean_log(keep_versions=3)
     # nothing was deleted, but the cutoff is already recorded …
     assert len(_log_versions(t)) == 12
-    assert t._log_earliest() == 9
+    assert t.log_earliest() == 9
     # … so time travel below it is (conservatively) refused
     with pytest.raises(LogRetentionError):
         t.snapshot(version=3).collect()
@@ -430,7 +430,7 @@ def test_maintain_rollup_rebuilds_after_log_retention(spark, tmp_path):
         )
     src.checkpoint()
     src.clean_log(keep_versions=2)
-    assert src._log_earliest() > cursor + 1
+    assert src.log_earliest() > cursor + 1
     new_cursor = maintain_rollup(spark, src, tgt, ["g"], "v", cursor)
     assert new_cursor == src.latest_version()
     got = {
@@ -480,7 +480,7 @@ def test_caughtup_stream_restarts_after_clean_log(spark, tmp_path):
         run_once()  # catch up fully (floor now at head)
     t.checkpoint()
     t.clean_log(keep_versions=2)  # cutoff ABOVE the last batch's start
-    assert t._log_earliest() >= 11
+    assert t.log_earliest() >= 11
     t.append(spark.range(900, 902).select(F.col("id").alias("k")))
     run_once()  # restart: re-plans committed batch, then drains new
     got = sorted(r["k"] for r in spark.read.parquet(out).collect())
@@ -539,7 +539,7 @@ def test_starting_timestamp_stream_restarts_after_clean_log(spark, tmp_path):
         run_once(ck)  # drain to the head before cleaning
     t.checkpoint()
     t.clean_log(keep_versions=3)
-    assert t._log_earliest() >= 15
+    assert t.log_earliest() >= 15
     t.append(spark.range(900, 902).select(F.col("id").alias("k")).coalesce(1))
     run_once(ck)  # RESTART from the same checkpoint: must not raise
     run_once(ck)

@@ -88,12 +88,12 @@ def test_legacy_txn_compat_folds_operation_labels(spark, tmp_path):
     df = spark.range(2).select(F.col("id").alias("v"))
     t.append(df, operation="job-b0")  # legacy-style: no txn field
     t.append(df, operation="job-b3")
-    assert t._stream_batch_high("job") == -1  # default: invisible
+    assert t.stream_batch_high("job") == -1  # default: invisible
     tc = LakehouseTable(spark, p, legacy_txn_compat=True)
-    assert tc._stream_batch_high("job") == 3
+    assert tc.stream_batch_high("job") == 3
     tc.checkpoint()  # folds legacy markers into the pointer txn map
     t2 = LakehouseTable(spark, p)  # flag dropped
-    assert t2._stream_batch_high("job") == 3
+    assert t2.stream_batch_high("job") == 3
 
 
 def test_sql_dml_fails_loudly_on_lakehouse_views(spark, tmp_path):
@@ -217,12 +217,12 @@ def test_legacy_txn_compat_recovers_markers_buried_under_checkpoint(
     t.append(df, operation="job-b0")  # legacy markers, no txn field
     t.append(df, operation="job-b6")
     t.checkpoint()  # label-blind checkpoint BURIES the markers
-    assert t._stream_batch_high("job") == -1  # default: invisible
+    assert t.stream_batch_high("job") == -1  # default: invisible
     tc = LakehouseTable(spark, p, legacy_txn_compat=True)
-    assert tc._stream_batch_high("job") == 6  # full-history scan
+    assert tc.stream_batch_high("job") == 6  # full-history scan
     tc.checkpoint()  # persists the recovered map
     t2 = LakehouseTable(spark, p)  # flag dropped
-    assert t2._stream_batch_high("job") == 6
+    assert t2.stream_batch_high("job") == 6
 
 
 def test_snapshot_seed_on_path_with_space(spark, tmp_path):

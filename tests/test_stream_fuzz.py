@@ -441,7 +441,7 @@ def test_stream_fuzz_log_retention_interplay(spark, tmp_path):
             lo = _apply_op(spark, t, rng, "append", lo)
         t.checkpoint()
         t.clean_log(keep_versions=1)
-        assert t._log_earliest() > seedv + 1
+        assert t.log_earliest() > seedv + 1
         with pytest.raises(Exception, match="LogRetention|fresh snapshot"):
             _drain_available_now(spark, str(t.path), ck, out, cap)
 
@@ -471,7 +471,7 @@ def test_stream_caughtup_through_auto_retention(spark, tmp_path):
         head = t.latest_version()
         want += _rows(t.read_changes_cdf(head - 1).collect())
         _drain_available_now(spark, str(t.path), ck, out, None)
-    assert t._log_earliest() > 0  # the auto-reclaim really fired
+    assert t.log_earliest() > 0  # the auto-reclaim really fired
     got = _rows(spark.read.parquet(out).collect())
     assert got == sorted(want)
 
@@ -655,3 +655,33 @@ def test_midstream_rename_logical_mode_fails_loud_then_restart(spark, tmp_path):
         .withColumnRenamed("v_usd", "vv")
     )
     assert got == _rows_kv(native.collect(), "vv")
+
+
+def test_midstream_drop_logical_mode_fails_loud(spark, tmp_path):
+    """A pinned column dropped after the logicalNames reader was built
+    must fail the next read with the restart recipe, like a mid-stream
+    rename, instead of replaying its stored values as NULLs. Driven on
+    the reader directly: Spark builds it once per query run, so a
+    constructed reader that outlives the drop is exactly that case."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from lakehouse_test_spark.sources.cdf_datasource import LakehouseCDFStreamReader
+
+    t = LakehouseTable(spark, str(tmp_path / "middroplog"))
+    d = t.path / "data" / "c0"
+    d.mkdir(parents=True)
+    pq.write_table(pa.table({"k": [1, 2], "v": [3, 6]}), d / "part-0.parquet")
+    t._commit_files(["data/c0/part-0.parquet"], "append", schema={"k": "bigint", "v": "bigint"})
+    r = LakehouseCDFStreamReader(
+        {"path": str(t.path), "logicalNames": "true"},
+        ["k", "v"],
+        {"k": "bigint", "v": "bigint"},
+    )
+    (part,) = r._tail_partitions(-1, 0)
+    (batch,) = r.read(part)
+    assert batch.column("v").to_pylist() == [3, 6]
+    t.drop_column("v")  # lands after the reader was built
+    with pytest.raises(RuntimeError, match="restart the stream"):
+        list(r.read(part))

@@ -285,7 +285,7 @@ def test_hilbert_incremental_after_rename(spark):
     t.hilbert_cluster(["x", "y"], target_partitions=4)
     t.rename_column("x", "xx")
     # rename_column follows the clustering spec automatically
-    assert t._read_meta()["clustering"]["cols"] == ["xx", "y"]
+    assert t.meta()["clustering"]["cols"] == ["xx", "y"]
     t.append(
         _xy(spark, 1024, 2048).withColumnRenamed("x", "xx").repartition(4, "id"),
         stats_cols=["xx", "y"],

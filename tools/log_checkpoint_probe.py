@@ -5,7 +5,7 @@ long-lived table).
 Forges N metadata-only commits (planning never opens data files), then
 times, at each decade:
   - _live_commits() with checkpoints (fast path) vs without (full parse)
-  - _stream_batch_high() — the streaming writer's per-batch replay dedup
+  - stream_batch_high() — the streaming writer's per-batch replay dedup
 
 Run: python tools/log_checkpoint_probe.py [--n 10000]
 """
@@ -90,10 +90,10 @@ def main() -> None:
             forge(u, n, checkpoint_every=None)
             plan_ck = timeit(lambda: t._live_commits())
             plan_full = timeit(lambda: u._live_commits())
-            ded_ck = timeit(lambda: t._stream_batch_high("stream-append"))
-            ded_full = timeit(lambda: u._stream_batch_high("stream-append"))
-            assert t._stream_batch_high("stream-append") == n - 1
-            assert u._stream_batch_high("stream-append") == n - 1
+            ded_ck = timeit(lambda: t.stream_batch_high("stream-append"))
+            ded_full = timeit(lambda: u.stream_batch_high("stream-append"))
+            assert t.stream_batch_high("stream-append") == n - 1
+            assert u.stream_batch_high("stream-append") == n - 1
             fast = [(c.version, c.files) for c in t._live_commits()]
             ptr = t.log_dir / "_last_checkpoint"
             bak = ptr.read_text()
